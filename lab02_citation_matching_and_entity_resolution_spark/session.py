@@ -8,14 +8,102 @@ is quadratic in string length), and shuffle parallelism tied to core count.
 
 from __future__ import annotations
 
+import logging
 import os
+from dataclasses import dataclass
+from typing import Callable, Iterable, Mapping
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # Pair-feature UDFs do O(len_a * len_b) work per row; keep Arrow batches small
 # enough that a single batch never stalls an executor thread for minutes.
 ARROW_MAX_RECORDS_PER_BATCH = 10_000
+# Heap ceiling: the round-7 tuning for 32 concurrent tasks (spills + GC thrash
+# at 8g killed scaling).  Reached on any host with >= 96 GiB of usable memory.
+MAX_DRIVER_MEM_MIB = 48 * 1024
+_MIB = 1024 * 1024
+
+
+@dataclass(frozen=True)
+class DriverMemory:
+    """The chosen ``spark.driver.memory`` and where it came from."""
+
+    setting: str  # value passed to spark.driver.memory, e.g. "8046m"
+    source: str  # "SPARK_GRAFT_DRIVER_MEM", "cgroup v2", "cgroup v1" or "physical RAM"
+    limit_bytes: int | None  # the memory limit the heap was derived from
+
+
+def physical_ram_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def cgroup_limit_files(
+    proc_cgroup: str = "/proc/self/cgroup", root: str = "/sys/fs/cgroup"
+) -> list[tuple[str, str]]:
+    """``(source, path)`` of every cgroup memory-limit file that may bind us.
+
+    Both the process's own cgroup (from ``proc_cgroup``) and the hierarchy
+    root are listed: inside a cgroup namespace the root IS the process's
+    cgroup and the ``/proc`` path does not exist under the mount.
+    """
+    v2 = {os.path.join(root, "memory.max")}
+    v1 = {os.path.join(root, "memory", "memory.limit_in_bytes")}
+    try:
+        with open(proc_cgroup) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        lines = []
+    for line in lines:
+        parts = line.split(":", 2)
+        if len(parts) != 3:
+            continue
+        _, controllers, path = parts
+        rel = path.lstrip("/")
+        if controllers == "":
+            v2.add(os.path.join(root, rel, "memory.max"))
+        elif "memory" in controllers.split(","):
+            v1.add(os.path.join(root, "memory", rel, "memory.limit_in_bytes"))
+    return [("cgroup v2", p) for p in sorted(v2)] + [("cgroup v1", p) for p in sorted(v1)]
+
+
+def _read_limit(path: str) -> int | None:
+    """A numeric limit from ``path``; None when absent or ``max``."""
+    try:
+        with open(path) as f:
+            text = f.read().strip()
+    except OSError:
+        return None
+    return int(text) if text.isdigit() else None
+
+
+def driver_memory(
+    env: Mapping[str, str] = os.environ,
+    limit_files: Iterable[tuple[str, str]] | None = None,
+    physical_ram: Callable[[], int] = physical_ram_bytes,
+) -> DriverMemory:
+    """Size the local-mode heap from the memory this process can use.
+
+    ``$SPARK_GRAFT_DRIVER_MEM`` wins when set.  Otherwise the limit is the
+    smallest of physical RAM and every numeric cgroup limit (cgroup v2
+    ``max`` and the v1 "unlimited" sentinel, which exceeds RAM, fall back to
+    physical RAM), and the heap is ``min(48g, limit // 2)``.  Half, because
+    off-heap use grows with the heap: JVM direct memory (Netty shuffle
+    buffers, Arrow transfers) may by default reach ``-Xmx`` again, plus the
+    code cache, metaspace and one Python worker per task for Arrow UDFs.
+    """
+    override = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return DriverMemory(override, "SPARK_GRAFT_DRIVER_MEM", None)
+    limit, source = physical_ram(), "physical RAM"
+    for name, path in cgroup_limit_files() if limit_files is None else limit_files:
+        value = _read_limit(path)
+        if value is not None and value < limit:
+            limit, source = value, name
+    mib = min(MAX_DRIVER_MEM_MIB, limit // 2 // _MIB)
+    return DriverMemory(f"{mib}m", source, limit)
 
 
 def get_spark(
@@ -26,8 +114,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[N]`` from ``$SPARK_GRAFT_CPUS`` (32 in the
-    sandbox); on a real cluster pass ``None`` and let spark-submit decide.
+    ``master`` defaults to ``local[N]`` from ``$SPARK_GRAFT_CPUS`` (default
+    32); on a real cluster pass ``None`` and let spark-submit decide.  The
+    driver heap defaults to half the process's memory limit (cgroup or
+    physical RAM), capped at 48g; ``$SPARK_GRAFT_DRIVER_MEM`` overrides it
+    (see ``driver_memory``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -54,6 +145,7 @@ def get_spark(
         "SPARK_GRAFT_JAVA_OPTS", "-XX:ReservedCodeCacheSize=512m"
     )
     method_split = os.environ.get("SPARK_GRAFT_CODEGEN_SPLIT", "128")
+    memory = driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -70,9 +162,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS_PER_BATCH))
         .config("spark.sql.session.timeZone", "UTC")
-        # single-JVM local mode: the driver heap IS the executor heap; size it
-        # for 32 concurrent tasks (spills + GC thrash at 8g killed scaling)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # single-JVM local mode: the driver heap IS the executor heap; sized
+        # from the host's memory limit (48g cap) unless $SPARK_GRAFT_DRIVER_MEM
+        .config("spark.driver.memory", memory.setting)
         .config("spark.ui.enabled", "false")
     )
     # shuffle/spill on tmpfs when available: the sandbox's virtual disk is
@@ -86,4 +178,18 @@ def get_spark(
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    fresh = SparkSession.getActiveSession() is None
+    spark = builder.getOrCreate()
+    if fresh:
+        # read back: extra_conf may override both; $SPARK_LOCAL_DIRS takes
+        # precedence over spark.local.dir in Spark
+        conf = spark.sparkContext.getConf()
+        log.info(
+            "spark session: driver heap %s (derived %s from %s, limit %s bytes), local dir %s",
+            conf.get("spark.driver.memory"),
+            memory.setting,
+            memory.source,
+            memory.limit_bytes,
+            os.environ.get("SPARK_LOCAL_DIRS") or conf.get("spark.local.dir", "java.io.tmpdir"),
+        )
+    return spark
