@@ -31,7 +31,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 N_BASE = int(os.environ.get("SPARK_GRAFT_REHEARSAL_NBASE", "24000"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 THRESHOLD = float(os.environ.get("SPARK_GRAFT_REHEARSAL_THRESHOLD", "0.7"))
 OUT_JSON = os.environ.get(
     "SPARK_GRAFT_REHEARSAL_OUT",
@@ -130,11 +130,6 @@ def main() -> None:
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": "4046",
-            # headroom for ~20 GB of /dev/shm shuffle + cached frames on the
-            # shared 128 GiB box (48g heap + fat persist OOM-killed run 1)
-            "spark.driver.memory": os.environ.get(
-                "SPARK_GRAFT_REHEARSAL_DRIVER_MEM", "40g"
-            ),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

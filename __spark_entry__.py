@@ -31,7 +31,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     The within-block self-join rides the engine's skew-cap discipline
     (blocking._cap_block): at most ``_ENTRY_BLOCK_CAP`` docs per (lang,
-    source) block, md5/xxhash-ranked deterministically — the same rule every
+    source) block, xxhash64-ranked deterministically — the same rule every
     dedup operator enforces (no uncapped within-block cross join anywhere,
     including this demo).  At sf0.001 every block is far below the cap, so
     the output is identical to the uncapped join (pinned by test).
@@ -64,7 +64,9 @@ def entry(spark: SparkSession) -> DataFrame:
             F.coalesce(F.col("source"), F.lit("\x00")),
         ),
     )
-    capped, _ = _cap_block(keyed, "_blk", _ENTRY_BLOCK_CAP, seed=23120334, id_col="doc_id")
+    capped, _ = _cap_block(
+        keyed, ["_blk"], "doc_id", _ENTRY_BLOCK_CAP, seed=23120334, rank="xxhash64"
+    )
     capped = capped.drop("_blk")
     a = capped.select(
         "lang",

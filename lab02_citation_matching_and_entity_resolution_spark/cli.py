@@ -35,10 +35,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="generate a synthetic corpus with N base entities instead of --input")
     ap.add_argument("--threshold", type=float, default=0.7)
     ap.add_argument("--greedy", action="store_true", help="reference-parity greedy 1:1 resolution")
-    ap.add_argument("--classic-scoring", action="store_true",
-                    help="use the classic two-join scoring plan instead of "
-                         "the fused block-local default (bit-identical "
-                         "results; the fused path shuffles ~4.6x less)")
     ap.add_argument("--cc-algorithm", default="auto",
                     choices=["auto", "propagation", "star"],
                     help="connected-components variant: auto (propagation "
@@ -199,7 +195,6 @@ def main(argv: list[str] | None = None) -> None:
 
     t0 = time.time()
     cfg = PipelineConfig(threshold=args.threshold, use_greedy_one_to_one=args.greedy,
-                         use_fused_scoring=not args.classic_scoring,
                          cc_algorithm=args.cc_algorithm,
                          cc_salt_buckets=args.cc_salt_buckets,
                          cc_hot_degree_threshold=args.cc_hot_degree_threshold)

@@ -23,7 +23,6 @@ from __future__ import annotations
 import re
 import string
 import unicodedata
-from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import Column
@@ -175,9 +174,12 @@ def normalize_text(text: str, strip_token_edges: bool = False) -> str:
 # --------------------------------------------------------------------------
 
 
-@lru_cache(maxsize=2)
 def normalize_text_udf(strip_token_edges: bool = False):
-    """Arrow-batched pandas UDF applying :func:`normalize_text` per batch."""
+    """Arrow-batched pandas UDF applying :func:`normalize_text` per batch.
+
+    Built per call, never cached: a UDF object kept across SparkContexts
+    holds the first context's Python accumulator, and every task of a later
+    context then fails to update it (an ERROR log line per task)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(StringType())

@@ -10,15 +10,16 @@ candidate pairs —
                      the analogue of the reference's arxiv_exact short-circuit
                      join, :446-448)
   pass "signature" : role/tool multiset + turn-count bucket (structural key)
-  pass "minhash"   : MinHash-LSH over char-shingle sets of doc_text
-                     (approxSimilarityJoin; recall extender)
+  pass "minhash"   : banded MinHash-LSH over the token sets (recall extender)
 
-Every pass produces canonical (left_id < right_id) pairs; passes are
-deduplicated with one distinct.  Skew: any block larger than ``block_cap``
-is capped BEFORE the self-join by a deterministic hash-ranked row_number —
-order-free (no rand(); reference's random.sample is row-order dependent, see
-SURVEY §7.4.4) — and every cap event is counted into a metrics DataFrame (no
-silent truncation).
+keyed_passes defines every pass's (conv_id, block_key) memberships once;
+candidate_pairs self-joins them on block_key into canonical (left_id <
+right_id) pairs and dedups across passes with one groupBy, and
+fused.fused_scored_pairs scores the same memberships block-locally.  Skew:
+any block larger than ``block_cap`` is capped BEFORE the self-join by a
+deterministic hash-ranked row_number — order-free (no rand(); reference's
+random.sample is row-order dependent, see SURVEY §7.4.4) — and every cap
+event is counted into a metrics DataFrame (no silent truncation).
 
 Scale notes: the self-join per pass shuffles on block_key; the cap bounds the
 worst block to cap^2/2 pairs.  AQE skew-join splits residual imbalance.  The
@@ -27,7 +28,7 @@ LSH pass's join is bucketed by (band hash) — bounded fan-out by construction.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,85 +42,137 @@ class BlockingConfig:
     block_cap: int = DEFAULT_BLOCK_CAP
     seed: int = 23120334
     minhash_enabled: bool = True
-    shingle_len: int = 5
     minhash_tables: int = 6         # LSH bands
     minhash_rows: int = 4           # minhashes per band (s-curve knee ~0.64)
     passes: tuple[str, ...] = ("token", "signature", "minhash")
 
 
-def _canonical_pairs(joined: DataFrame, pass_name: str) -> DataFrame:
-    return joined.select(
-        F.least("l_id", "r_id").alias("left_id"),
-        F.greatest("l_id", "r_id").alias("right_id"),
-        F.lit(pass_name).alias("block_pass"),
-        "block_key",
-    ).where(F.col("left_id") != F.col("right_id"))
+def _md5_rank(id_col: str, seed: int) -> F.Column:
+    """Engine-portable deterministic rank key: md5(id || '#seed').
+
+    md5 (not xxhash64) so a DuckDB oracle applying the same cap reproduces
+    the exact survivor set; stable under any partitioning."""
+    return F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}")))
 
 
 def _cap_block(
-    df: DataFrame, key: str, cap: int, seed: int, id_col: str = "conv_id"
+    df: DataFrame,
+    block_cols: list[str],
+    id_col: str,
+    cap: int,
+    seed: int,
+    rank: str = "md5",
 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministically keep at most ``cap`` rows per block key.
+    """Deterministically keep at most ``cap`` rows per block.
 
-    Ranking is by xxhash64(id, seed) — stable under any partitioning/row
-    order, unlike rand().  Returns (capped_df, cap_metrics_df).
+    The one skew-cap primitive of every self-joining operator (blocking
+    passes, the dedup operators, the entry demo): a hot block (boilerplate
+    text, one dominant language slice) otherwise goes quadratic at corpus
+    scale.  Rows are ranked by a hash of (id, seed) — stable under any
+    partitioning/row order, unlike rand().  ``rank="md5"`` is engine-portable
+    (the DuckDB oracles reproduce its survivors); ``rank="xxhash64"`` is the
+    cheaper rank the token and signature blocking passes use.  Returns
+    (survivors, metrics-of-capped-blocks).
     """
     from pyspark.sql.window import Window
 
-    ranked = df.withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.partitionBy(key).orderBy(F.xxhash64(id_col, F.lit(seed)), id_col)
-        ),
-    )
-    capped = ranked.where(F.col("_rk") <= cap).drop("_rk")
+    if rank == "md5":
+        rank_col = _md5_rank(id_col, seed)
+    elif rank == "xxhash64":
+        rank_col = F.xxhash64(F.col(id_col), F.lit(seed))
+    else:
+        raise ValueError(f"unknown rank {rank!r}")
+    w = Window.partitionBy(*block_cols).orderBy(rank_col, F.col(id_col))
+    ranked = df.withColumn("_rk", F.row_number().over(w))
     metrics = (
-        ranked.groupBy(key)
+        ranked.groupBy(*block_cols)
         .agg(F.count(F.lit(1)).alias("block_size"))
         .where(F.col("block_size") > cap)
         .select(
-            F.col(key).alias("block_key"),
-            F.col("block_size"),
+            F.concat_ws("|", *[F.col(c).cast("string") for c in block_cols]).alias(
+                "block_key"
+            ),
+            "block_size",
             F.lit(cap).alias("cap"),
             (F.col("block_size") - cap).alias("rows_dropped"),
         )
     )
-    return capped, metrics
+    return ranked.where(F.col("_rk") <= cap).drop("_rk"), metrics
 
 
-def _self_join_pairs(keyed: DataFrame, pass_name: str) -> DataFrame:
-    """Within-block cross product as a self equi-join on block_key."""
-    left = keyed.select(F.col("block_key"), F.col("conv_id").alias("l_id"))
-    right = keyed.select(F.col("block_key"), F.col("conv_id").alias("r_id"))
-    return _canonical_pairs(
-        left.join(right, "block_key").where(F.col("l_id") < F.col("r_id")),
-        pass_name,
-    )
+def keyed_passes(docs: DataFrame, cfg: BlockingConfig):
+    """[(pass_name, keyed(conv_id, block_key), cap_metrics)] — each enabled
+    pass's capped block memberships.  The one definition of the blocking
+    keys: candidate_pairs self-joins these rows on block_key, and
+    fused.fused_scored_pairs joins the scoring payload onto them first.
 
+      token     : prefix of the normalized doc_text (xxhash64-ranked cap)
+      signature : sha1 of role/tool multiset + turn-count bucket (xxhash64)
+      minhash   : one row per LSH band, keyed "band_idx#band_key" (md5 cap)
+    """
+    out = []
+    if "token" in cfg.passes:
+        keyed = docs.select(
+            "conv_id",
+            F.substring("doc_text", 1, cfg.token_prefix_len).alias("block_key"),
+        ).where(F.length("block_key") > 0)
+        capped, m = _cap_block(
+            keyed, ["block_key"], "conv_id", cfg.block_cap, cfg.seed, rank="xxhash64"
+        )
+        out.append(("token", capped, m.withColumn("block_pass", F.lit("token"))))
+    if "signature" in cfg.passes:
+        keyed = docs.select(
+            "conv_id",
+            F.sha1(
+                F.concat_ws(
+                    "|",
+                    F.concat_ws(",", "roles"),
+                    F.concat_ws(",", "tools"),
+                    (F.col("n_turns") / 4).cast("int").cast("string"),
+                )
+            ).alias("block_key"),
+        )
+        capped, m = _cap_block(
+            keyed, ["block_key"], "conv_id", cfg.block_cap, cfg.seed, rank="xxhash64"
+        )
+        out.append(("signature", capped, m.withColumn("block_pass", F.lit("signature"))))
+    if "minhash" in cfg.passes and cfg.minhash_enabled:
+        from .dedup import minhash_band_index
 
-def token_prefix_pass(docs: DataFrame, cfg: BlockingConfig) -> DataFrame:
-    keyed = docs.select(
-        "conv_id",
-        F.substring("doc_text", 1, cfg.token_prefix_len).alias("block_key"),
-    ).where(F.length("block_key") > 0)
-    capped, metrics = _cap_block(keyed, "block_key", cfg.block_cap, cfg.seed)
-    return _self_join_pairs(capped, "token"), metrics
-
-
-def signature_pass(docs: DataFrame, cfg: BlockingConfig) -> DataFrame:
-    keyed = docs.select(
-        "conv_id",
-        F.sha1(
-            F.concat_ws(
-                "|",
-                F.concat_ws(",", "roles"),
-                F.concat_ws(",", "tools"),
-                (F.col("n_turns") / 4).cast("int").cast("string"),
-            )
-        ).alias("block_key"),
-    )
-    capped, metrics = _cap_block(keyed, "block_key", cfg.block_cap, cfg.seed)
-    return _self_join_pairs(capped, "signature"), metrics
+        # Native banded MinHash-LSH (token explode -> salted-min signature ->
+        # band keys) rather than Spark ML's MinHashLSH: the ML variant pays
+        # vector-UDT construction plus an approxSimilarityJoin whose explode
+        # dominated the blocking stage (~6x this pass's cost at bench scale).
+        # Token-level: near-duplicate conversations keep a nearly identical
+        # token SET under word swaps/insertions, and tokens are ~10-30x fewer
+        # than char shingles (char-shingle minhash stays in dedup.py, where
+        # sub-token granularity matters).  array_distinct before the explode:
+        # min() is duplicate-invariant, so the signatures are IDENTICAL while
+        # the exploded rows (each pays n_hashes xxhash64 evals) drop by the
+        # per-doc token repetition factor.  Band buckets are skew-capped too:
+        # a boilerplate band shared by thousands of docs would otherwise
+        # explode the self-join quadratically.
+        n_hashes = cfg.minhash_tables * cfg.minhash_rows
+        exploded = docs.select(
+            "conv_id", F.explode(F.array_distinct("tokens")).alias("tok")
+        )
+        sigs = exploded.groupBy("conv_id").agg(
+            *[
+                F.min(F.xxhash64(F.col("tok"), F.lit(i))).alias(f"h{i}")
+                for i in range(n_hashes)
+            ]
+        )
+        keyed = minhash_band_index(
+            sigs, n_hashes=n_hashes, bands=cfg.minhash_tables, id_col="conv_id"
+        )
+        capped, m = _cap_block(
+            keyed, ["band_idx", "band_key"], "conv_id", cfg.block_cap, cfg.seed
+        )
+        capped = capped.select(
+            "conv_id", F.concat_ws("#", "band_idx", "band_key").alias("block_key")
+        )
+        out.append(("minhash", capped, m.withColumn("block_pass", F.lit("minhash"))))
+    return out
 
 
 def clean_for_shingles(col: F.Column) -> F.Column:
@@ -152,112 +205,49 @@ def shingle_expr_cleaned(cleaned: F.Column, n: int) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_expr_on(col: F.Column, n: int) -> F.Column:
-    """Distinct char n-grams of an arbitrary string Column (see shingle_expr).
-
-    NOTE: inlines the cleaning into the lambda — O(text) work per shingle
-    position.  Hot paths should materialize clean_for_shingles(col) once and
-    use shingle_expr_cleaned (see its docstring)."""
-    return shingle_expr_cleaned(clean_for_shingles(col), n)
-
-
 def shingle_expr(text_col: str, n: int) -> F.Column:
     """Distinct char n-grams of the whitespace-stripped lowercase text.
 
     Native equivalent of the reference's _char_ngrams
     (src/feature_engineering_utils.py:71-78) — transform over sequence keeps
-    it inside codegen; no Python.
+    it inside codegen; no Python.  Inlines the cleaning into the lambda (see
+    shingle_expr_cleaned): fine for the per-pair feature column, hot paths
+    materialize clean_for_shingles first.
     """
-    cleaned = f"regexp_replace(lower({text_col}), '\\\\s+', '')"
-    return F.expr(
-        f"case when length({cleaned}) >= {n} then "
-        f"array_distinct(transform(sequence(1, length({cleaned}) - {n} + 1),"
-        f" i -> substring({cleaned}, i, {n}))) else array() end"
-    )
+    return shingle_expr_cleaned(clean_for_shingles(F.col(text_col)), n)
 
 
-def minhash_pass(docs: DataFrame, cfg: BlockingConfig) -> tuple[DataFrame, DataFrame]:
-    """MinHash-LSH candidate pairs over doc_text char shingles.
-
-    Native banded implementation (shingle explode -> salted-min signature ->
-    band-key self-join) rather than Spark ML's MinHashLSH: the ML variant
-    pays vector-UDT construction plus an approxSimilarityJoin whose explode
-    dominated the blocking stage (~6x this pass's cost at bench scale).
-    xxhash64 signatures keep the whole pass in whole-stage codegen.
-    Band keys are themselves skew-capped (a boilerplate shingle shared by
-    thousands of docs would otherwise quadratically explode the self-join).
-    """
-    from .dedup import minhash_band_pairs
-
-    n_hashes = cfg.minhash_tables * cfg.minhash_rows
-    # token-level minhash: near-duplicate conversations keep a nearly
-    # identical token SET even under word swaps/insertions, and tokens are
-    # ~10-30x fewer than char shingles — the explode volume (rows x hashes)
-    # drops accordingly.  Char-shingle minhash remains in dedup.py where
-    # sub-token granularity matters.
-    # array_distinct before the explode: min() is duplicate-invariant, so
-    # the signatures are IDENTICAL while the exploded row count (each row
-    # pays n_hashes xxhash64 evals in the partial agg) drops by the per-doc
-    # token repetition factor (guide §2.3: aggregate before you shuffle)
-    exploded = docs.select("conv_id", F.explode(F.array_distinct("tokens")).alias("tok"))
-    sigs = exploded.groupBy("conv_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("tok"), F.lit(i))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    pairs, metrics = minhash_band_pairs(
-        sigs,
-        n_hashes=n_hashes,
-        bands=cfg.minhash_tables,
-        id_col="conv_id",
-        band_cap=cfg.block_cap,
-        cap_seed=cfg.seed,
-        return_metrics=True,
-    )
-    return (
-        pairs.select(
-            "left_id",
-            "right_id",
-            F.lit("minhash").alias("block_pass"),
-            F.lit("lsh").alias("block_key"),
-        ),
-        metrics,
-    )
+def union_all(frames: list[DataFrame]) -> DataFrame:
+    """unionByName over a non-empty list of same-schema frames."""
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def candidate_pairs(docs: DataFrame, cfg: BlockingConfig | None = None) -> tuple[DataFrame, DataFrame]:
     """Union of all blocking passes, canonical + deduplicated.
 
+    Each keyed pass self-joins on block_key (left_id < right_id within a
+    block); one groupBy dedups pairs across passes and bands.
+
     Returns (pairs_df[left_id, right_id, block_passes], cap_metrics_df).
     """
     cfg = cfg or BlockingConfig()
     docs = docs.persist()
+    passes = keyed_passes(docs, cfg)
     all_pairs = []
-    all_metrics = []
-    if "token" in cfg.passes:
-        p, m = token_prefix_pass(docs, cfg)
-        all_pairs.append(p.drop("_m"))
-        all_metrics.append(m.withColumn("block_pass", F.lit("token")))
-    if "signature" in cfg.passes:
-        p, m = signature_pass(docs, cfg)
-        all_pairs.append(p)
-        all_metrics.append(m.withColumn("block_pass", F.lit("signature")))
-    if "minhash" in cfg.passes and cfg.minhash_enabled:
-        p, m = minhash_pass(docs, cfg)
-        all_pairs.append(p)
-        # band-bucket truncation joins the audit frame like every other
-        # skew cap — requesting the metrics also silences the library's
-        # unaudited-cap warning on its own internal hot path
-        all_metrics.append(m.withColumn("block_pass", F.lit("minhash")))
-    unioned = all_pairs[0]
-    for p in all_pairs[1:]:
-        unioned = unioned.unionByName(p)
+    for pass_name, keyed, _ in passes:
+        left = keyed.select("block_key", F.col("conv_id").alias("left_id"))
+        right = keyed.select("block_key", F.col("conv_id").alias("right_id"))
+        all_pairs.append(
+            left.join(right, "block_key")
+            .where(F.col("left_id") < F.col("right_id"))
+            .select("left_id", "right_id", F.lit(pass_name).alias("block_pass"))
+        )
     pairs = (
-        unioned.groupBy("left_id", "right_id")
+        union_all(all_pairs)
+        .groupBy("left_id", "right_id")
         .agg(F.sort_array(F.collect_set("block_pass")).alias("block_passes"))
     )
-    metrics = all_metrics[0]
-    for m in all_metrics[1:]:
-        metrics = metrics.unionByName(m)
-    return pairs, metrics
+    return pairs, union_all([m for _, _, m in passes])

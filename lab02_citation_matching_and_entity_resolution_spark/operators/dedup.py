@@ -31,7 +31,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocking import clean_for_shingles, shingle_expr_cleaned  # noqa: F401 (re-export compat)
+from .blocking import _cap_block, clean_for_shingles, shingle_expr_cleaned
 
 CAP_METRICS_SCHEMA = "block_key string, block_size long, cap int, rows_dropped long"
 
@@ -77,47 +77,6 @@ def _md5_i64(col: F.Column, salt: int) -> F.Column:
     return F.conv(F.substring(F.md5(F.concat(col, F.lit(f"#{salt}"))), 1, 15), 16, 10).cast(
         "long"
     )
-
-
-def _md5_rank(id_col: str, cap_seed: int) -> F.Column:
-    """Engine-portable deterministic rank key: md5(id || '#seed').
-
-    md5 (not xxhash64) so a DuckDB oracle applying the same cap reproduces
-    the exact survivor set; stable under any partitioning."""
-    return F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"#{cap_seed}")))
-
-
-def _cap_block(
-    df: DataFrame,
-    block_cols: list[str],
-    id_col: str,
-    cap: int,
-    cap_seed: int,
-) -> tuple[DataFrame, DataFrame]:
-    """row_number()<=cap inside each block, md5(id)-ranked; returns
-    (survivors, metrics-of-capped-blocks). Shared skew-cap discipline for
-    every self-joining dedup operator — a hot block (boilerplate text, one
-    dominant language slice) otherwise goes quadratic at corpus scale."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*block_cols).orderBy(
-        _md5_rank(id_col, cap_seed), F.col(id_col)
-    )
-    ranked = df.withColumn("_rk", F.row_number().over(w))
-    metrics = (
-        ranked.groupBy(*block_cols)
-        .agg(F.count(F.lit(1)).alias("block_size"))
-        .where(F.col("block_size") > cap)
-        .select(
-            F.concat_ws("|", *[F.col(c).cast("string") for c in block_cols]).alias(
-                "block_key"
-            ),
-            "block_size",
-            F.lit(cap).alias("cap"),
-            (F.col("block_size") - cap).alias("rows_dropped"),
-        )
-    )
-    return ranked.where(F.col("_rk") <= cap).drop("_rk"), metrics
 
 
 def _warn_cap_unaudited(op: str, cap: int, param: str = "block_cap") -> None:

@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from .blocking import shingle_expr
+from .blocking import clean_for_shingles, shingle_expr, shingle_expr_cleaned
+from .tfidf import doc_tfidf_maps, hashed_key_maps
 
 YEAR_DIFF_SENTINEL = 100  # ref: src/feature_engineering_utils.py:198
 
@@ -233,13 +234,21 @@ def jaro_winkler(a: str, b: str, prefix_weight: float = 0.1) -> float:
     return j + prefix * prefix_weight * (1.0 - j)
 
 
-@pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    out = np.empty(len(a), dtype=np.float64)
-    av, bv = a.fillna("").to_numpy(), b.fillna("").to_numpy()
-    for i in range(len(av)):
-        out[i] = jaro_winkler(av[i][:JW_PREFIX_CAP], bv[i][:JW_PREFIX_CAP])
-    return pd.Series(out)
+def jaro_winkler_udf():
+    """The Arrow-batched Jaro-Winkler UDF over prefixes capped at
+    JW_PREFIX_CAP.  Built per call: a UDF object kept across SparkContexts
+    holds the first context's Python accumulator, and every task of a later
+    context then fails to update it (an ERROR log line per task)."""
+
+    @pandas_udf(DoubleType())
+    def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+        out = np.empty(len(a), dtype=np.float64)
+        av, bv = a.fillna("").to_numpy(), b.fillna("").to_numpy()
+        for i in range(len(av)):
+            out[i] = jaro_winkler(av[i][:JW_PREFIX_CAP], bv[i][:JW_PREFIX_CAP])
+        return pd.Series(out)
+
+    return jaro_winkler_udf
 
 
 # ---------------------------------------------------------------------------
@@ -292,7 +301,6 @@ def doc_payload(docs: DataFrame) -> DataFrame:
     pair rows at ~4 KB compressed each (21.9 GB shuffle for 5.5M pairs), and
     the text was a leading term.
     """
-    from .blocking import clean_for_shingles, shingle_expr_cleaned
 
     def hashed(arr: Column) -> Column:
         return F.transform(arr, lambda s: F.xxhash64(s))
@@ -345,28 +353,45 @@ def prefixed_payload(
     )
 
 
-def pair_features(
-    pairs: DataFrame,
-    docs: DataFrame,
-    attach_tfidf: bool = True,
-    tfidf_scope_cols: tuple[str, ...] | None = None,
-    persist_payload: bool = True,
-    hash_vec_keys: bool = True,
+def scoring_payload(
+    docs: DataFrame, scope_cols: tuple[str, ...] | None = None
 ) -> DataFrame:
+    """doc_payload plus each doc's TF-IDF vector (terms, weights, vec), the
+    one per-doc input of both pair scorers, persisted.
+
+    Left join: token-less docs keep NULL vectors, which tfidf_cosine_col
+    coalesces to 0.0.  Term keys ship xxhash64-encoded (tfidf.hashed_key_maps):
+    the vector columns are the widest part of the rows the pair joins and
+    the block self-join shuffle, and the dot only does exact-match lookups.
+    ``scope_cols`` selects the IDF fit scope (see tfidf.doc_tfidf_vectors).
+
+    Persisted so one materialization feeds every join side.  Without it,
+    column pruning projects the l side to (payload, terms, weights) and the
+    r side to (payload, vec) BELOW their exchanges, the subplans stop being
+    equal, ReuseExchange cannot fire, and the whole doc-side payload+TF-IDF
+    pipeline (4 aggregations + join) runs once per side (round-7 event-log
+    capture: 2-9 s per stage on the 4x corpus).
+    """
+    return (
+        doc_payload(docs)
+        .join(hashed_key_maps(doc_tfidf_maps(docs, scope_cols=scope_cols)), "conv_id", "left")
+        .persist()
+    )
+
+
+def pair_features(pairs: DataFrame, docs: DataFrame, attach_tfidf: bool = True) -> DataFrame:
     """Attach the full feature vector to candidate pairs.
 
     ``pairs``: (left_id, right_id, ...); ``docs``: assemble_documents output.
     Two shuffle joins on conv_id recover both sides' document attributes; all
     features are computed pipeline-local after the joins (no extra shuffle).
 
-    The payload now also carries each doc's GLOBAL-scope TF-IDF vector
-    (l_terms/l_weights on the left side, r_vec lookup map on the right), so
-    pair_tfidf_cosine can compute the cosine from these columns WITHOUT its
-    own two joins: the classic 4-exchange chain (two payload joins + two
-    vector joins, each re-shuffling the heavy pair rows) becomes 2 exchanges
-    (round-7: the vector joins were +15 s of the 56 s all-features wall at
-    861k pairs).  Callers that never compute the cosine lose nothing: the
-    vector columns are projection-pruned out of the joins unless consumed.
+    The payload (scoring_payload) also carries each doc's GLOBAL-scope
+    TF-IDF vector (l_terms/l_weights on the left side, r_vec lookup map on
+    the right), so pair_tfidf_cosine computes the cosine from these columns
+    WITHOUT its own two joins (round-7: the vector joins were +15 s of the
+    56 s all-features wall at 861k pairs).  ``attach_tfidf=False`` ships the
+    plain doc_payload, for callers that never compute the cosine.
 
     NOTE the second join still re-shuffles the l-enriched pair rows — the
     production hot path is fused.fused_scored_pairs, which ships payload
@@ -383,37 +408,12 @@ def pair_features(
     # the pair side unsorted: measured 2-2.9x on the full-feature path at
     # 5.5M pairs.  The build side per task is docs_rows/shuffle_partitions x
     # ~12 KB — trivially in-memory at any realistic partitioning.
-    pay = doc_payload(docs)
-    # vectors ride along only for the global fit (the hot-path default);
-    # a scoped fit (tfidf_scope_cols) or attach_tfidf=False skips the maps
-    # join entirely and pair_tfidf_cosine falls back to its own joins
-    ship_tfidf = attach_tfidf and tfidf_scope_cols is None
-    l_extra, r_extra = [], []
-    if ship_tfidf:
-        from .tfidf import doc_tfidf_maps, hashed_key_maps
-
-        # left join: token-less docs keep NULL vectors; the cosine coalesces
-        # them to 0.0 — identical semantics to pair_tfidf_cosine's left joins.
-        # hash_vec_keys (production default) ships int64 term keys instead of
-        # strings — see tfidf.hashed_key_maps; False keeps the string-keyed
-        # ride for the bit-parity witness test.
-        tw = doc_tfidf_maps(docs)
-        if hash_vec_keys:
-            tw = hashed_key_maps(tw)
-        pay = pay.join(tw, "conv_id", "left")
+    if attach_tfidf:
+        pay = scoring_payload(docs)
         l_extra, r_extra = ["terms", "weights"], ["vec"]
-    if persist_payload:
-        # one materialization feeds BOTH join sides.  Without it, column
-        # pruning projects the l side to (payload, terms, weights) and the
-        # r side to (payload, vec) BELOW their exchanges, the two subplans
-        # stop being equal, ReuseExchange cannot fire, and the whole
-        # doc-side payload+TF-IDF pipeline (4 aggregations + join) runs
-        # TWICE as ~15 serialized AQE query stages (round-7 event-log
-        # capture: 2-9 s per stage on the 4x corpus).  Same discipline and
-        # same caveat as fused_scored_pairs' persist_payload: disable for
-        # corpora where the per-doc payload exceeds executor storage (the
-        # recompute is correct, just slower).
-        pay = pay.persist()
+    else:
+        pay = doc_payload(docs).persist()
+        l_extra, r_extra = [], []
     joined = pairs.join(
         prefixed_payload(pay, "l", "left_id", extra_cols=l_extra).hint("shuffle_hash"),
         "left_id",
@@ -444,6 +444,7 @@ def with_pair_feature_columns(joined: DataFrame) -> DataFrame:
     # already distinct doc-side, so |union| = na + nb - |inter| exactly)
     tok_inter = F.size(F.array_intersect("l_tokset", "r_tokset"))
     tok_union_n = F.size("l_tokset") + F.size("r_tokset") - tok_inter
+    sig_inter = F.size(F.array_intersect("l_sig", "r_sig"))
 
     return (
         joined.withColumn(
@@ -471,12 +472,11 @@ def with_pair_feature_columns(joined: DataFrame) -> DataFrame:
             "jaccard",
             F.when(tok_union_n == 0, F.lit(0.0)).otherwise(tok_inter / tok_union_n),
         )
-        .withColumn("token_overlap", F.size(F.array_intersect("l_tokset", "r_tokset")))
+        .withColumn("token_overlap", tok_inter)
         .withColumn(
             "token_overlap_ratio",
             F.when((F.col("l_ntok") == 0) | (F.col("r_ntok") == 0), F.lit(0.0)).otherwise(
-                F.size(F.array_intersect("l_tokset", "r_tokset"))
-                / F.greatest("l_ntok", "r_ntok")
+                tok_inter / F.greatest("l_ntok", "r_ntok")
             ),
         )
         .withColumn("char_ngram_3", ngram_jac(3))
@@ -491,13 +491,7 @@ def with_pair_feature_columns(joined: DataFrame) -> DataFrame:
             "role_tool_overlap",
             F.when(
                 (F.size("l_sig") == 0) | (F.size("r_sig") == 0), F.lit(0.0)
-            ).otherwise(
-                F.size(F.array_intersect("l_sig", "r_sig"))
-                / (
-                    F.size("l_sig") + F.size("r_sig")
-                    - F.size(F.array_intersect("l_sig", "r_sig"))
-                )
-            ),
+            ).otherwise(sig_inter / (F.size("l_sig") + F.size("r_sig") - sig_inter)),
         )
         .withColumn(
             "signature_match",
@@ -513,7 +507,7 @@ def with_pair_feature_columns(joined: DataFrame) -> DataFrame:
         .withColumn("year_diff", year_diff_col(F.col("l_year"), F.col("r_year")))
         .withColumn("source_year", F.col("l_year"))
         .withColumn("cand_year", F.col("r_year"))
-        .withColumn("jaro_winkler", jaro_winkler_udf(F.col("l_pfx"), F.col("r_pfx")))
+        .withColumn("jaro_winkler", jaro_winkler_udf()(F.col("l_pfx"), F.col("r_pfx")))
         .drop(
             "l_pfx", "r_pfx", "l_tokset", "r_tokset", "l_ntok", "r_ntok",
             *[f"{s}_sh{n}" for s in "lr" for n in (3, 4, 5)],

@@ -27,10 +27,12 @@ moves each doc once per block: token 1x + signature 1x + minhash bands 6x
 vs ~77x per-pair replication).
 
 Pair-set, feature, and score parity with the classic path is exact by
-construction (same _cap_block rankings, same canonical l<r rule, same
-feature expressions via features.with_pair_feature_columns, same
-score_pairs_rule) and pinned by tests/test_fused_scoring.py, which asserts
-bit-identical frames on a synthetic corpus.
+construction: the two paths differ only in how pair rows meet the per-doc
+payload (per-pair joins vs this block self-join).  Both read the same
+blocking.keyed_passes memberships (keys, caps, rankings), the same
+features.scoring_payload, the same features.with_pair_feature_columns, the
+same tfidf.tfidf_cosine_col and the same score_pairs_rule.
+tests/test_fused_scoring.py pins bit-identical frames on a synthetic corpus.
 
 Reference analogue: the notebooks score candidates inside each paper-block
 loop (ref: notebooks/match_and_fe.ipynb, src/match_utils.py:427-495) —
@@ -43,90 +45,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocking import BlockingConfig, _cap_block as _cap_block_xx
-from .dedup import (
-    CAP_METRICS_SCHEMA,
-    _cap_block as _cap_block_md5,
-    minhash_band_index,
-)
+# erbench/traced.py imports _keyed_passes from this module
+from .blocking import BlockingConfig, keyed_passes as _keyed_passes, union_all
 from .features import (
     FEATURE_COLS,
-    doc_payload,
     prefixed_payload,
+    scoring_payload,
     with_pair_feature_columns,
 )
 from .scoring import score_pairs_rule
-from .tfidf import doc_tfidf_maps, hashed_key_maps
+from .tfidf import tfidf_cosine_col
 
 # slim output carried per scored pair (everything downstream needs; no
 # payload arrays survive past the scoring stage)
 SCORED_COLS = [*FEATURE_COLS, "tfidf_cosine", "score", "reason"]
-
-# the same fold pair_tfidf_cosine uses: O(|l_terms|) map lookups, codegen
-_TFIDF_DOT = (
-    "aggregate(zip_with(l_terms, l_weights,"
-    " (t, w) -> w * coalesce(element_at(r_vec, t), 0D)),"
-    " 0D, (acc, x) -> acc + x)"
-)
-
-
-def _keyed_passes(docs: DataFrame, cfg: BlockingConfig):
-    """[(pass_name, keyed(conv_id, block_key), cap_metrics)] — the identical
-    keys, caps, and rankings blocking.candidate_pairs uses, so the fused
-    pair set matches the classic one exactly."""
-    out = []
-    if "token" in cfg.passes:
-        keyed = docs.select(
-            "conv_id",
-            F.substring("doc_text", 1, cfg.token_prefix_len).alias("block_key"),
-        ).where(F.length("block_key") > 0)
-        capped, m = _cap_block_xx(keyed, "block_key", cfg.block_cap, cfg.seed)
-        out.append(("token", capped, m.withColumn("block_pass", F.lit("token"))))
-    if "signature" in cfg.passes:
-        keyed = docs.select(
-            "conv_id",
-            F.sha1(
-                F.concat_ws(
-                    "|",
-                    F.concat_ws(",", "roles"),
-                    F.concat_ws(",", "tools"),
-                    (F.col("n_turns") / 4).cast("int").cast("string"),
-                )
-            ).alias("block_key"),
-        )
-        capped, m = _cap_block_xx(keyed, "block_key", cfg.block_cap, cfg.seed)
-        out.append(("signature", capped, m.withColumn("block_pass", F.lit("signature"))))
-    if "minhash" in cfg.passes and cfg.minhash_enabled:
-        n_hashes = cfg.minhash_tables * cfg.minhash_rows
-        # array_distinct: min() is duplicate-invariant — identical
-        # signatures, fewer exploded rows (same change as blocking.minhash_pass)
-        exploded = docs.select(
-            "conv_id", F.explode(F.array_distinct("tokens")).alias("tok")
-        )
-        sigs = exploded.groupBy("conv_id").agg(
-            *[
-                F.min(F.xxhash64(F.col("tok"), F.lit(i))).alias(f"h{i}")
-                for i in range(n_hashes)
-            ]
-        )
-        keyed = minhash_band_index(
-            sigs, n_hashes=n_hashes, bands=cfg.minhash_tables, id_col="conv_id"
-        )
-        capped, m = _cap_block_md5(
-            keyed, ["band_idx", "band_key"], "conv_id", cfg.block_cap, cfg.seed
-        )
-        capped = capped.select(
-            "conv_id", F.concat_ws("#", "band_idx", "band_key").alias("block_key")
-        )
-        out.append(("minhash", capped, m.withColumn("block_pass", F.lit("minhash"))))
-    return out
 
 
 def fused_scored_pairs(
     docs: DataFrame,
     cfg: BlockingConfig | None = None,
     scope_cols: tuple[str, ...] | None = None,
-    persist_payload: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """docs -> (scored pairs, cap_metrics) in ONE fused blocking+scoring plan.
 
@@ -136,11 +74,9 @@ def fused_scored_pairs(
     pair_tfidf_cosine(pair_features(candidate_pairs(docs), docs))) produces,
     without ever shuffling payload-enriched pair rows.
 
-    ``persist_payload`` caches the per-doc payload (payload + TF-IDF vector,
-    ~8 KB/doc) so the six self-join branches (l/r x 3 passes) read the cache
-    instead of recomputing the TF-IDF sub-pipeline; at 72k docs that is
-    ~0.6 GB — disable for corpora where docs alone exceed executor storage
-    (the recompute is correct, just slower).
+    The per-doc payload (features.scoring_payload, ~8 KB/doc) is persisted
+    so the six self-join branches (l/r x 3 passes) read the cache instead of
+    recomputing the TF-IDF sub-pipeline; at 72k docs that is ~0.6 GB.
 
     Memory precondition of the shuffle_hash hints: a ShuffledHashJoin BUILD
     side must fit in task memory and does not spill.  The block-key
@@ -150,25 +86,10 @@ def fused_scored_pairs(
     corpora, fewer shuffle partitions, or heavily skewed block keys, either
     raise spark.sql.shuffle.partitions so per-partition builds stay in the
     tens of MB, or strip the hints (SortMergeJoin spills gracefully at the
-    cost of re-sorting the heavy rows) — same caveat class as
-    ``persist_payload``.
+    cost of re-sorting the heavy rows).
     """
     cfg = cfg or BlockingConfig()
-    spark = docs.sparkSession
-
-    # one payload per doc: feature inputs + TF-IDF terms/weights/vec (left
-    # join: token-less docs keep NULL vectors, the dot coalesces to 0.0 —
-    # same as pair_tfidf_cosine's left joins).  Term keys ship xxhash64-
-    # encoded (int64) — the vector columns are the widest part of the
-    # membership rows the block self-join shuffles, and the dot only does
-    # exact-match lookups (tfidf.hashed_key_maps; parity pinned by tests).
-    pay = doc_payload(docs).join(
-        hashed_key_maps(doc_tfidf_maps(docs, scope_cols=scope_cols)),
-        "conv_id",
-        "left",
-    )
-    if persist_payload:
-        pay = pay.persist()
+    pay = scoring_payload(docs, scope_cols=scope_cols)
 
     scored_parts = []
     metrics_parts = []
@@ -198,7 +119,7 @@ def fused_scored_pairs(
             F.col("left_id") < F.col("right_id")
         )
         feat = with_pair_feature_columns(joined).withColumn(
-            "tfidf_cosine", F.coalesce(F.expr(_TFIDF_DOT), F.lit(0.0))
+            "tfidf_cosine", tfidf_cosine_col()
         )
         scored_parts.append(
             score_pairs_rule(feat).select(
@@ -209,9 +130,7 @@ def fused_scored_pairs(
             )
         )
 
-    unioned = scored_parts[0]
-    for p in scored_parts[1:]:
-        unioned = unioned.unionByName(p)
+    unioned = union_all(scored_parts)
     # cross-pass/band dedup on SLIM rows: every occurrence of a pair carries
     # identical feature values (deterministic expressions over the same two
     # payloads), so first() is exact, not a tie-break
@@ -220,10 +139,4 @@ def fused_scored_pairs(
         *[F.first(c).alias(c) for c in SCORED_COLS],
     )
 
-    if metrics_parts:
-        metrics = metrics_parts[0]
-        for m in metrics_parts[1:]:
-            metrics = metrics.unionByName(m)
-    else:
-        metrics = spark.createDataFrame([], CAP_METRICS_SCHEMA + ", block_pass string")
-    return scored, metrics
+    return scored, union_all(metrics_parts)

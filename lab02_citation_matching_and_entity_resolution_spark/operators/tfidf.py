@@ -18,7 +18,7 @@ scale compatible with the reference's vectorizer defaults.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -146,6 +146,22 @@ def hashed_key_maps(tw: DataFrame) -> DataFrame:
     )
 
 
+def tfidf_cosine_col() -> Column:
+    """The pair cosine over ``l_terms``/``l_weights`` and the ``r_vec`` map
+    (either key encoding): a JVM map-lookup fold over the left side's terms,
+
+        sum over (t, w) in left:  w * right_map[t]
+
+    O(terms) per pair, whole-stage codegen; 0.0 when either side has no
+    vector (token-less docs join as NULL)."""
+    dot = F.expr(
+        "aggregate(zip_with(l_terms, l_weights,"
+        " (t, w) -> w * coalesce(element_at(r_vec, t), 0D)),"
+        " 0D, (acc, x) -> acc + x)"
+    )
+    return F.coalesce(dot, F.lit(0.0))
+
+
 def pair_tfidf_cosine(
     pairs: DataFrame,
     docs: DataFrame,
@@ -160,17 +176,8 @@ def pair_tfidf_cosine(
     on term, then re-aggregate per pair) multiplies the pair count by terms-
     per-doc (~60x) through two wide shuffles.  Instead both sides' sparse
     vectors join ON conv_id (row count never exceeds |pairs|) and the dot
-    product is a JVM map-lookup fold over the smaller side's terms:
-
-        sum over (t, w) in left:  w * right_map[t]
-
-    — zero extra shuffle, O(terms) per pair, whole-stage codegen.
+    product is tfidf_cosine_col — zero extra shuffle.
     """
-    dot = F.expr(
-        "aggregate(zip_with(l_terms, l_weights,"
-        " (t, w) -> w * coalesce(element_at(r_vec, t), 0D)),"
-        " 0D, (acc, x) -> acc + x)"
-    )
     # Zero-join fast path: pair_features already ships each side's
     # GLOBAL-scope vector through its payload joins (l_terms/l_weights/
     # r_vec), so the cosine is a pipelined map-lookup fold — no exchange at
@@ -181,9 +188,9 @@ def pair_tfidf_cosine(
     if scope_cols is None and {"l_terms", "l_weights", "r_vec"}.issubset(
         set(pairs.columns)
     ):
-        return pairs.withColumn(
-            "tfidf_cosine", F.coalesce(dot, F.lit(0.0))
-        ).drop("l_terms", "l_weights", "r_vec")
+        return pairs.withColumn("tfidf_cosine", tfidf_cosine_col()).drop(
+            "l_terms", "l_weights", "r_vec"
+        )
 
     tw = doc_tfidf_maps(docs, scope_cols=scope_cols)
     l = tw.select(
@@ -202,9 +209,6 @@ def pair_tfidf_cosine(
     return (
         pairs.join(l.hint("shuffle_hash"), "left_id", "left")
         .join(r.hint("shuffle_hash"), "right_id", "left")
-        .withColumn(
-            "tfidf_cosine",
-            F.coalesce(dot, F.lit(0.0)),
-        )
+        .withColumn("tfidf_cosine", tfidf_cosine_col())
         .drop("l_terms", "l_weights", "r_vec")
     )

@@ -4,13 +4,9 @@ Stage graph (each stage a pure DataFrame -> DataFrame function; the pipeline
 only sequences them and optionally checkpoints between stages):
 
   assemble   transcripts -> documents           (shuffle on conv_id)
-  block+score documents -> scored pairs         (DEFAULT: fused block-local
-                                                 plan, operators/fused.py —
+  block+score documents -> scored pairs         (fused block-local plan,
+                                                 operators/fused.py —
                                                  payload ships per block)
-  [classic]  block -> featurize -> score        (use_fused_scoring=False:
-                                                 multi-pass candidate_pairs,
-                                                 2 payload joins, same rows
-                                                 bit-identically)
   resolve    scores     -> matches              (threshold [+ greedy 1:1])
   cluster    matches    -> entity clusters      (iterative min-label CC)
 
@@ -28,17 +24,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
-from ..operators.blocking import BlockingConfig, candidate_pairs
+from ..operators.blocking import BlockingConfig
 from ..operators.clustering import (
     connected_components,
     connected_components_auto,
     connected_components_star,
 )
-from ..operators.features import pair_features
+from ..operators.fused import fused_scored_pairs
 from ..operators.metrics import cluster_quality, pairwise_prf
 from ..operators.resolve import greedy_one_to_one
-from ..operators.scoring import score_pairs_rule
-from ..operators.tfidf import pair_tfidf_cosine
 
 DEFAULT_THRESHOLD = 0.7  # reference MATCH_THRESHOLD (match_and_fe.ipynb cell 3)
 
@@ -48,14 +42,6 @@ class PipelineConfig:
     threshold: float = DEFAULT_THRESHOLD
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     use_greedy_one_to_one: bool = False  # reference-parity resolution mode
-    # fused block-local scoring (operators/fused.py): the same pair set,
-    # features, and scores as the classic candidate_pairs -> pair_features ->
-    # pair_tfidf_cosine chain (bit-identical, pinned by
-    # tests/test_fused_scoring.py) but each doc's payload ships once per
-    # BLOCK membership instead of once per pair — measured 4.6x less scoring
-    # shuffle and 2.2-2.9x faster at 10x bench scale, so it is the default;
-    # False keeps the classic two-join plan (the parity witness path)
-    use_fused_scoring: bool = True
     max_cc_iter: int = 25
     # "auto" (default: propagation, falling back ONCE to star on
     # non-convergence — right when component shapes are unknown),
@@ -93,20 +79,16 @@ class PipelineResult:
 def run_pipeline(transcripts: DataFrame, cfg: PipelineConfig | None = None) -> PipelineResult:
     cfg = cfg or PipelineConfig()
     docs = assemble_documents(transcripts).persist()
-    if cfg.use_fused_scoring:
-        from ..operators.fused import fused_scored_pairs
-
-        scored, block_metrics = fused_scored_pairs(
-            docs, cfg.blocking, scope_cols=cfg.tfidf_scope_cols
-        )
-        scored = scored.persist()
-        # the scored frame IS the deduped candidate set (left, right, passes)
-        pairs = scored.select("left_id", "right_id", "block_passes")
-    else:
-        pairs, block_metrics = candidate_pairs(docs, cfg.blocking)
-        feat = pair_features(pairs, docs, tfidf_scope_cols=cfg.tfidf_scope_cols)
-        feat = pair_tfidf_cosine(feat, docs, scope_cols=cfg.tfidf_scope_cols)
-        scored = score_pairs_rule(feat).persist()
+    # fused block-local scoring (operators/fused.py): each doc's payload
+    # ships once per BLOCK membership instead of once per pair — measured
+    # 4.6x less scoring shuffle and 2.2-2.9x faster at 10x bench scale than
+    # the per-pair-join chain, with bit-identical rows
+    scored, block_metrics = fused_scored_pairs(
+        docs, cfg.blocking, scope_cols=cfg.tfidf_scope_cols
+    )
+    scored = scored.persist()
+    # the scored frame IS the deduped candidate set (left, right, passes)
+    pairs = scored.select("left_id", "right_id", "block_passes")
 
     if cfg.use_greedy_one_to_one:
         with_block = scored.withColumn(
