@@ -37,8 +37,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 COMPUTE_ROWS = int(os.environ.get("SPARK_GRAFT_CPU_SCALING_ROWS", "4000000000"))
 ALLOC_ROWS = int(os.environ.get("SPARK_GRAFT_CPU_SCALING_ALLOC_ROWS", "240000000"))
 REPS = int(os.environ.get("SPARK_GRAFT_CPU_SCALING_REPS", "2"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+# N and 4N threads, 4N = the host's CPUs (8,32 on the 32-vCPU box above)
 LEVELS = tuple(
-    int(c) for c in os.environ.get("SPARK_GRAFT_CPU_SCALING_CORES", "8,32").split(",")
+    int(c)
+    for c in os.environ.get(
+        "SPARK_GRAFT_CPU_SCALING_CORES", f"{max(1, CPUS // 4)},{CPUS}"
+    ).split(",")
 )
 
 RUNNER = r"""

@@ -31,7 +31,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 N_BASE = int(os.environ.get("SPARK_GRAFT_REHEARSAL_NBASE", "24000"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 THRESHOLD = float(os.environ.get("SPARK_GRAFT_REHEARSAL_THRESHOLD", "0.7"))
 OUT_JSON = os.environ.get(
     "SPARK_GRAFT_REHEARSAL_OUT",

@@ -2,8 +2,8 @@
 """Scaling-efficiency evidence runner (north rule: >=0.8 from N to 4N).
 
 No real cluster exists in this sandbox, so per BASELINE.md the same job runs
-at local[8] and local[32] on the SAME synthetic input; efficiency =
-(T_8 / T_32) / 4.  Each run is a fresh JVM (subprocess) so executor-thread
+at local[N] and local[4N] on the SAME synthetic input; efficiency =
+(T_N / T_4N) / 4.  Each run is a fresh JVM (subprocess) so executor-thread
 pools don't bleed between measurements.
 
 Writes BENCH/scaling_results.json and prints a summary table.
@@ -19,12 +19,18 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_BASE = int(os.environ.get("SPARK_GRAFT_SCALING_NBASE", "6000"))
-# N and 4N parallelism levels. Default 2->8: a pure-compute control
-# (cpu_scaling.py) shows this sandbox's visible 32 vCPUs saturate at ~8
-# schedulable cores (throughput at 16 threads is LOWER than at 8 — hypervisor
-# oversubscription), so 8->32 measures the hypervisor, not the dataflow.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+# N and 4N parallelism levels, 4N = min(8, host CPUs): a pure-compute control
+# (cpu_scaling.py) showed a 32-vCPU box saturating at ~8 schedulable cores
+# (throughput at 16 threads LOWER than at 8 — hypervisor oversubscription),
+# so 8->32 measures the hypervisor, not the dataflow.  2->8 there; 1->4 on a
+# 4-vCPU host.
+_TOP = min(8, CPUS)
 CORE_LEVELS = tuple(
-    int(c) for c in os.environ.get("SPARK_GRAFT_SCALING_CORES", "2,8").split(",")
+    int(c)
+    for c in os.environ.get(
+        "SPARK_GRAFT_SCALING_CORES", f"{max(1, _TOP // 4)},{_TOP}"
+    ).split(",")
 )
 
 # PREP runs once, unpinned at full width: synth -> assemble -> blocking,
@@ -34,13 +40,14 @@ CORE_LEVELS = tuple(
 PREP = r"""
 import json, os, sys
 sys.path.insert(0, "@REPO@")
-n_base = int(sys.argv[1]); out_dir = sys.argv[2]
+n_base = int(sys.argv[1]); out_dir = sys.argv[2]; cpus = int(sys.argv[3])
 from lab02_citation_matching_and_entity_resolution_spark.session import get_spark
 from lab02_citation_matching_and_entity_resolution_spark.synth import SynthConfig, transcripts_df_distributed
 from lab02_citation_matching_and_entity_resolution_spark.operators.assemble import assemble_documents
 from lab02_citation_matching_and_entity_resolution_spark.operators.blocking import candidate_pairs
 
-spark = get_spark(app_name="er-scale-prep", master="local[32]", shuffle_partitions=32)
+spark = get_spark(app_name="er-scale-prep", master=f"local[{cpus}]",
+                  shuffle_partitions=max(cpus, 32))
 spark.sparkContext.setLogLevel("ERROR")
 tr = transcripts_df_distributed(spark, SynthConfig(n_base=n_base)).persist(); tr.count()
 docs = assemble_documents(tr).persist(); docs.count()
@@ -152,10 +159,11 @@ def prepare_data(n_base: int = N_BASE, data_dir: str = DATA_DIR) -> None:
                 print(f"reusing prepared corpus n_base={n_base} at {data_dir}")
                 return
     os.makedirs(data_dir, exist_ok=True)
-    print(f"preparing corpus n_base={n_base} at {data_dir} (unpinned local[32])",
+    print(f"preparing corpus n_base={n_base} at {data_dir} (unpinned local[{CPUS}])",
           flush=True)
     out = subprocess.run(
-        [sys.executable, "-c", PREP.replace("@REPO@", REPO), str(n_base), data_dir],
+        [sys.executable, "-c", PREP.replace("@REPO@", REPO), str(n_base), data_dir,
+         str(CPUS)],
         capture_output=True, text=True, timeout=3600, env=_env(), cwd=REPO,
     )
     if "prepared" not in out.stdout:

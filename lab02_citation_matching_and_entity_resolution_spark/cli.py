@@ -35,16 +35,10 @@ def main(argv: list[str] | None = None) -> None:
                     help="generate a synthetic corpus with N base entities instead of --input")
     ap.add_argument("--threshold", type=float, default=0.7)
     ap.add_argument("--greedy", action="store_true", help="reference-parity greedy 1:1 resolution")
-    ap.add_argument("--cc-algorithm", default="auto",
-                    choices=["auto", "propagation", "star"],
-                    help="connected-components variant: auto (propagation "
-                         "with one-shot star fallback on non-convergence; "
-                         "default), propagation (1 join/round, O(diameter)) "
-                         "or star (large/small-star, O(log n) — for "
-                         "long-chain components)")
     ap.add_argument("--cc-salt-buckets", type=int, default=16,
                     help="salted skew handling: reducers per hot vertex in "
-                         "the CC label join (ignored by --cc-algorithm star)")
+                         "the CC label join (propagation rounds; the star "
+                         "fallback needs none)")
     ap.add_argument("--cc-hot-degree-threshold", type=int, default=1_000_000,
                     help="symmetrized degree at which a vertex counts as hot "
                          "for CC salting")
@@ -112,71 +106,7 @@ def main(argv: list[str] | None = None) -> None:
     store = TableStore(spark, args.output)
 
     if args.stream_input:
-        from .streaming.ingest import read_transcript_stream, start_ingest
-
-        ckpt = os.path.join(args.output, "_stream_ckpt")
-        q = start_ingest(read_transcript_stream(spark, args.stream_input), store, ckpt,
-                         near_dups=args.stream_near_dups)
-        drained = q.awaitTermination(600)
-        if not drained:
-            # timeout: counts would be mid-drain lies and spark.stop() would
-            # kill an active batch — stop the query cleanly and fail loudly
-            q.stop()
-            print("stream drain TIMED OUT after 600s — partial state, re-run "
-                  "to resume from checkpoint", file=sys.stderr)
-            spark.stop()
-            sys.exit(2)
-        n_turns = store.read("turns_raw").count() if store.exists("turns_raw") else 0
-        n_docs = (
-            store.read("documents_live").count()
-            if store.exists("documents_live")
-            else 0
-        )
-        print(f"stream drained: turns_raw={n_turns} documents_live={n_docs}")
-        if args.stream_stats:
-            from .streaming.live_stats import start_live_stats_drain
-
-            qs = start_live_stats_drain(
-                read_transcript_stream(spark, args.stream_input),
-                store,
-                os.path.join(args.output, "_stream_stats_ckpt"),
-                gap_seconds=args.stream_gap_seconds,
-            )
-            for q2 in qs:
-                if not q2.awaitTermination(600):
-                    # stop EVERY stats query, not just the timed-out one:
-                    # a sibling still active when spark.stop() runs is the
-                    # mid-batch kill the ingest path avoids by stopping the
-                    # query first (round-5 ADVICE)
-                    for q3 in qs:
-                        q3.stop()
-                    print("stream stats drain TIMED OUT after 600s — re-run "
-                          "to resume from checkpoint", file=sys.stderr)
-                    spark.stop()
-                    sys.exit(2)
-            def _n(table: str) -> int:
-                # a drain that closed nothing leaves a metadata-only sink
-                # dir; parquet schema inference fails there -> count is 0.
-                # Only THAT failure maps to 0 — a genuinely corrupted sink
-                # must not masquerade as a clean empty drain (round-5
-                # ADVICE), so anything else logs and re-raises.
-                from pyspark.errors import AnalysisException
-
-                if not store.exists(table):
-                    return 0
-                try:
-                    return store.read(table).count()
-                except AnalysisException as exc:
-                    msg = str(exc)
-                    if "UNABLE_TO_INFER_SCHEMA" in msg or "Unable to infer schema" in msg:
-                        return 0  # metadata-only sink dir: nothing was closed
-                    print(f"reading {table} failed: {msg}", file=sys.stderr)
-                    raise
-
-            n_rate = _n("turn_rate_5m")
-            n_closed = _n("conversations_closed")
-            print(f"stream stats: turn_rate_5m={n_rate} "
-                  f"conversations_closed={n_closed}")
+        _run_stream(spark, store, args)
         spark.stop()
         return
 
@@ -195,7 +125,6 @@ def main(argv: list[str] | None = None) -> None:
 
     t0 = time.time()
     cfg = PipelineConfig(threshold=args.threshold, use_greedy_one_to_one=args.greedy,
-                         cc_algorithm=args.cc_algorithm,
                          cc_salt_buckets=args.cc_salt_buckets,
                          cc_hot_degree_threshold=args.cc_hot_degree_threshold)
     result = run_pipeline(transcripts, cfg)
@@ -246,6 +175,84 @@ def main(argv: list[str] | None = None) -> None:
         f"clusters={n_clusters} wall={wall:.1f}s pairs/sec={n_pairs / wall:.0f}"
     )
     spark.stop()
+
+
+def _run_stream(spark, store, args) -> None:
+    """--stream-input mode body: drain the JSONL turn directory into
+    documents_live (checkpointed under <output>/_stream_ckpt, at most
+    DRAIN_MAX_FILES_PER_TRIGGER files per micro-batch), then optionally the
+    live-stats queries; prints the drained table counts."""
+    from .streaming.ingest import (
+        DRAIN_MAX_FILES_PER_TRIGGER,
+        read_transcript_stream,
+        start_ingest,
+    )
+
+    ckpt = os.path.join(args.output, "_stream_ckpt")
+    stream = read_transcript_stream(
+        spark, args.stream_input, max_files_per_trigger=DRAIN_MAX_FILES_PER_TRIGGER
+    )
+    q = start_ingest(stream, store, ckpt, near_dups=args.stream_near_dups)
+    drained = q.awaitTermination(600)
+    if not drained:
+        # timeout: counts would be mid-drain lies and spark.stop() would
+        # kill an active batch — stop the query cleanly and fail loudly
+        q.stop()
+        print("stream drain TIMED OUT after 600s — partial state, re-run "
+              "to resume from checkpoint", file=sys.stderr)
+        spark.stop()
+        sys.exit(2)
+    n_turns = store.read("turns_raw").count() if store.exists("turns_raw") else 0
+    n_docs = (
+        store.read("documents_live").count()
+        if store.exists("documents_live")
+        else 0
+    )
+    print(f"stream drained: turns_raw={n_turns} documents_live={n_docs}")
+    if args.stream_stats:
+        from .streaming.live_stats import start_live_stats_drain
+
+        qs = start_live_stats_drain(
+            read_transcript_stream(spark, args.stream_input),
+            store,
+            os.path.join(args.output, "_stream_stats_ckpt"),
+            gap_seconds=args.stream_gap_seconds,
+        )
+        for q2 in qs:
+            if not q2.awaitTermination(600):
+                # stop EVERY stats query, not just the timed-out one:
+                # a sibling still active when spark.stop() runs is the
+                # mid-batch kill the ingest path avoids by stopping the
+                # query first (round-5 ADVICE)
+                for q3 in qs:
+                    q3.stop()
+                print("stream stats drain TIMED OUT after 600s — re-run "
+                      "to resume from checkpoint", file=sys.stderr)
+                spark.stop()
+                sys.exit(2)
+        def _n(table: str) -> int:
+            # a drain that closed nothing leaves a metadata-only sink
+            # dir; parquet schema inference fails there -> count is 0.
+            # Only THAT failure maps to 0 — a genuinely corrupted sink
+            # must not masquerade as a clean empty drain (round-5
+            # ADVICE), so anything else logs and re-raises.
+            from pyspark.errors import AnalysisException
+
+            if not store.exists(table):
+                return 0
+            try:
+                return store.read(table).count()
+            except AnalysisException as exc:
+                msg = str(exc)
+                if "UNABLE_TO_INFER_SCHEMA" in msg or "Unable to infer schema" in msg:
+                    return 0  # metadata-only sink dir: nothing was closed
+                print(f"reading {table} failed: {msg}", file=sys.stderr)
+                raise
+
+        n_rate = _n("turn_rate_5m")
+        n_closed = _n("conversations_closed")
+        print(f"stream stats: turn_rate_5m={n_rate} "
+              f"conversations_closed={n_closed}")
 
 
 def _run_dedup(spark, store, log, run_id: str, args) -> None:

@@ -21,6 +21,10 @@ deterministic hash-ranked row_number — order-free (no rand(); reference's
 random.sample is row-order dependent, see SURVEY §7.4.4) — and every cap
 event is counted into a metrics DataFrame (no silent truncation).
 
+block_pairs is the one capped block self-join: candidate_pairs, every dedup
+pair generator (operators/dedup.py) and metrics.cluster_quality key their
+rows and call it; audited_result is the one return policy around its audit.
+
 Scale notes: the self-join per pass shuffles on block_key; the cap bounds the
 worst block to cap^2/2 pairs.  AQE skew-join splits residual imbalance.  The
 LSH pass's join is bucketed by (band hash) — bounded fan-out by construction.
@@ -28,19 +32,23 @@ LSH pass's join is bucketed by (band hash) — bounded fan-out by construction.
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BLOCK_CAP = 200  # reference MAX_REFS = MAX_BIBS = 200 (notebook cell 3)
+DEFAULT_CAP_SEED = 23120334
+# one row per capped block: the audit every capped operator returns
+CAP_METRICS_SCHEMA = "block_key string, block_size long, cap int, rows_dropped long"
 
 
 @dataclass
 class BlockingConfig:
     token_prefix_len: int = 48      # chars of normalized doc_text in the token key
     block_cap: int = DEFAULT_BLOCK_CAP
-    seed: int = 23120334
+    seed: int = DEFAULT_CAP_SEED
     minhash_enabled: bool = True
     minhash_tables: int = 6         # LSH bands
     minhash_rows: int = 4           # minhashes per band (s-curve knee ~0.64)
@@ -98,6 +106,82 @@ def _cap_block(
         )
     )
     return ranked.where(F.col("_rk") <= cap).drop("_rk"), metrics
+
+
+def empty_cap_audit(spark: SparkSession) -> DataFrame:
+    """The cap audit of an uncapped pass: CAP_METRICS_SCHEMA, no rows."""
+    return spark.createDataFrame([], CAP_METRICS_SCHEMA)
+
+
+def block_pairs(
+    keyed: DataFrame,
+    key_cols: list[str] | tuple[str, ...],
+    id_col: str,
+    cap: int | None = None,
+    cap_seed: int = DEFAULT_CAP_SEED,
+    carry: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame | None]:
+    """The capped block self-join: (pairs, cap audit).
+
+    ``keyed`` holds one row per (id, block) membership.  Rows sharing every
+    ``key_cols`` value meet once as a canonical ``left_id < right_id`` pair;
+    each ``carry`` column rides along as ``l_<c>`` / ``r_<c>``.  The pairs
+    keep the key columns, so a pair sharing several blocks appears once per
+    shared block — callers that need set semantics dedup after their filter.
+
+    Cap discipline (every self-joining pair generator): at corpus scale a
+    coarse or boilerplate block — the whole ("en", "web") slice, a hot LSH
+    band bucket, one 16-bit simhash prefix — goes quadratic, so ``cap``
+    bounds every block BEFORE the join to ``cap`` rows ranked by md5(id ||
+    '#seed') (_cap_block: stable under any partitioning and engine-portable,
+    so a DuckDB oracle with the same cap reproduces the exact pair set).
+    The cap DOES drop rows in hot blocks; the audit frame
+    (CAP_METRICS_SCHEMA) has one row per truncated block, and an empty
+    audit certifies that nothing was dropped.  ``cap=None`` is exhaustive
+    (quadratic-risk) and returns audit None (audited_result hands a caller
+    that asked for it an empty audit).  At 100 TB, prefer finer
+    keys (LSH band, fingerprint prefix) over raising the cap.
+    """
+    key_cols = list(key_cols)
+    audit = None
+    if cap is not None:
+        keyed, audit = _cap_block(keyed, key_cols, id_col, cap, cap_seed)
+
+    def side(prefix: str, id_alias: str) -> DataFrame:
+        return keyed.select(
+            *key_cols,
+            F.col(id_col).alias(id_alias),
+            *[F.col(c).alias(f"{prefix}_{c}") for c in carry],
+        )
+
+    pairs = side("l", "left_id").join(side("r", "right_id"), key_cols)
+    return pairs.where(F.col("left_id") < F.col("right_id")), audit
+
+
+def audited_result(
+    op: str,
+    out: DataFrame,
+    audit: DataFrame | None,
+    cap: int | None,
+    return_metrics: bool,
+    param: str = "block_cap",
+) -> DataFrame | tuple[DataFrame, DataFrame]:
+    """The return policy of a capped operator: ``(out, audit)`` when the
+    caller asked for the audit (an empty one when uncapped, ``audit`` None);
+    otherwise ``out``, with a RuntimeWarning when an active cap's audit is
+    being discarded."""
+    if return_metrics:
+        return out, (audit if audit is not None else empty_cap_audit(out.sparkSession))
+    if cap is not None:
+        warnings.warn(
+            f"{op}: {param}={cap} is active — rows beyond the cap in hot "
+            "buckets are dropped deterministically (md5-ranked). Pass "
+            "return_metrics=True to receive the per-block truncation audit, "
+            f"or {param}=None for exhaustive (quadratic-risk) behavior.",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    return out
 
 
 def keyed_passes(docs: DataFrame, cfg: BlockingConfig):
@@ -228,22 +312,20 @@ def union_all(frames: list[DataFrame]) -> DataFrame:
 def candidate_pairs(docs: DataFrame, cfg: BlockingConfig | None = None) -> tuple[DataFrame, DataFrame]:
     """Union of all blocking passes, canonical + deduplicated.
 
-    Each keyed pass self-joins on block_key (left_id < right_id within a
-    block); one groupBy dedups pairs across passes and bands.
+    Each keyed pass (already capped by keyed_passes) self-joins on
+    block_key; one groupBy dedups pairs across passes and bands.  Every
+    pass reads ``docs`` — persist it first, the caller owns the cache.
 
     Returns (pairs_df[left_id, right_id, block_passes], cap_metrics_df).
     """
     cfg = cfg or BlockingConfig()
-    docs = docs.persist()
     passes = keyed_passes(docs, cfg)
     all_pairs = []
     for pass_name, keyed, _ in passes:
-        left = keyed.select("block_key", F.col("conv_id").alias("left_id"))
-        right = keyed.select("block_key", F.col("conv_id").alias("right_id"))
         all_pairs.append(
-            left.join(right, "block_key")
-            .where(F.col("left_id") < F.col("right_id"))
-            .select("left_id", "right_id", F.lit(pass_name).alias("block_pass"))
+            block_pairs(keyed, ["block_key"], "conv_id")[0].select(
+                "left_id", "right_id", F.lit(pass_name).alias("block_pass")
+            )
         )
     pairs = (
         union_all(all_pairs)

@@ -22,6 +22,10 @@ Beyond the reference's content-hash dedup (ref: src/parse_util.py:1121-1130,
 
 Everything is native DataFrame ops (no Python in the hot path); the md5-based
 hashing keeps every operator reproducible across engines and cluster sizes.
+Every self-joining generator keys its rows, calls blocking.block_pairs (the
+one capped block self-join; its docstring states the cap discipline) and
+keeps only its own pair filter; blocking.audited_result is the one return
+policy for the cap audit.
 """
 
 from __future__ import annotations
@@ -31,9 +35,14 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocking import _cap_block, clean_for_shingles, shingle_expr_cleaned
-
-CAP_METRICS_SCHEMA = "block_key string, block_size long, cap int, rows_dropped long"
+from .blocking import (
+    DEFAULT_CAP_SEED,
+    _cap_block,
+    audited_result,
+    block_pairs,
+    clean_for_shingles,
+    shingle_expr_cleaned,
+)
 
 
 def fan_out_narrow_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -79,17 +88,6 @@ def _md5_i64(col: F.Column, salt: int) -> F.Column:
     )
 
 
-def _warn_cap_unaudited(op: str, cap: int, param: str = "block_cap") -> None:
-    warnings.warn(
-        f"{op}: {param}={cap} is active — rows beyond the cap in hot "
-        "buckets are dropped deterministically (md5-ranked). Pass "
-        "return_metrics=True to receive the per-block truncation audit, "
-        "or block_cap=None for exhaustive (quadratic-risk) behavior.",
-        RuntimeWarning,
-        stacklevel=3,
-    )
-
-
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Groups of byte-identical content; keeper = min id (deterministic)."""
     return (
@@ -110,19 +108,13 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     block_cap: int | None = 2000,
-    cap_seed: int = 23120334,
+    cap_seed: int = DEFAULT_CAP_SEED,
     return_metrics: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Within-block char-n-gram Jaccard near-duplicate pairs >= threshold.
 
-    The self-join blocks on ``block_cols``; at corpus scale a coarse block
-    (e.g. the whole ("en","web") slice) is a quadratic catastrophe, so
-    ``block_cap`` bounds every block to a deterministic md5(id)-ranked
-    sample before the join (same discipline as simhash/minhash). The cap
-    DOES drop rows in hot blocks: pass return_metrics=True for the
-    per-block truncation audit (a warning is emitted when the audit is
-    discarded). At 100 TB, prefer finer caller-supplied blocks (LSH band,
-    fingerprint prefix) over raising the cap.
+    The self-join blocks on ``block_cols``, capped at ``block_cap`` rows per
+    block (blocking.block_pairs); return_metrics=True adds the cap audit.
     """
     sh = (
         fan_out_narrow_input(docs)
@@ -136,25 +128,14 @@ def ngram_jaccard_pairs(
         )
         .where(F.size("sh") > 0)
     )
-    metrics = None
-    if block_cap is not None:
-        sh, metrics = _cap_block(sh, list(block_cols), id_col, block_cap, cap_seed)
-        if not return_metrics:
-            _warn_cap_unaudited("ngram_jaccard_pairs", block_cap)
-    a = sh.select(*block_cols, F.col(id_col).alias("left_id"), F.col("sh").alias("sha"))
-    b = sh.select(*block_cols, F.col(id_col).alias("right_id"), F.col("sh").alias("shb"))
-    pairs = a.join(b, list(block_cols)).where(F.col("left_id") < F.col("right_id"))
-    jac = F.size(F.array_intersect("sha", "shb")) / F.size(F.array_union("sha", "shb"))
+    pairs, audit = block_pairs(sh, block_cols, id_col, block_cap, cap_seed, carry=("sh",))
+    jac = F.size(F.array_intersect("l_sh", "r_sh")) / F.size(F.array_union("l_sh", "r_sh"))
     out = (
         pairs.withColumn("jaccard", F.round(jac, 6))
         .where(F.col("jaccard") >= threshold)
         .select("left_id", "right_id", "jaccard")
     )
-    if return_metrics:
-        if metrics is None:
-            metrics = docs.sparkSession.createDataFrame([], CAP_METRICS_SCHEMA)
-        return out, metrics
-    return out
+    return audited_result("ngram_jaccard_pairs", out, audit, block_cap, return_metrics)
 
 
 def minhash_signatures(
@@ -234,7 +215,7 @@ def incremental_band_pairs(
     bands: int = 4,
     id_col: str = "doc_id",
     band_cap: int | None = 1000,
-    cap_seed: int = 23120334,
+    cap_seed: int = DEFAULT_CAP_SEED,
     return_metrics: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """New-batch docs vs an existing corpus LSH index: (left_id=new,
@@ -248,12 +229,14 @@ def incremental_band_pairs(
 
     ``band_cap`` bounds BOTH sides' buckets (a hot boilerplate bucket in
     the standing index would otherwise fan every matching new doc into
-    thousands of pairs), md5-ranked as everywhere; rows where the same id
-    appears on both sides (re-ingest) are excluded.
+    thousands of pairs), md5-ranked as in blocking.block_pairs; rows where
+    the same id appears on both sides (re-ingest) are excluded.  A
+    new-vs-corpus cross join, not a self-join, so it joins the two sides
+    itself.
     """
     new_keyed = minhash_band_index(new_sigs, n_hashes=n_hashes, bands=bands, id_col=id_col)
     corpus_keyed = corpus_index
-    metrics = None
+    audit = None
     if band_cap is not None:
         new_keyed, m_new = _cap_block(
             new_keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
@@ -261,9 +244,7 @@ def incremental_band_pairs(
         corpus_keyed, m_corp = _cap_block(
             corpus_keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
         )
-        metrics = m_new.unionByName(m_corp)
-        if not return_metrics:
-            _warn_cap_unaudited("incremental_band_pairs", band_cap, "band_cap")
+        audit = m_new.unionByName(m_corp)
     l = new_keyed.select(F.col(id_col).alias("left_id"), "band_idx", "band_key")
     r = corpus_keyed.select(F.col(id_col).alias("right_id"), "band_idx", "band_key")
     out = (
@@ -272,11 +253,9 @@ def incremental_band_pairs(
         .select("left_id", "right_id")
         .distinct()
     )
-    if return_metrics:
-        if metrics is None:
-            metrics = new_sigs.sparkSession.createDataFrame([], CAP_METRICS_SCHEMA)
-        return out, metrics
-    return out
+    return audited_result(
+        "incremental_band_pairs", out, audit, band_cap, return_metrics, "band_cap"
+    )
 
 
 def minhash_band_pairs(
@@ -285,43 +264,24 @@ def minhash_band_pairs(
     bands: int = 4,
     id_col: str = "doc_id",
     band_cap: int | None = 1000,
-    cap_seed: int = 23120334,
+    cap_seed: int = DEFAULT_CAP_SEED,
     return_metrics: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Banded LSH: docs sharing any full band of minhashes become a pair.
 
     All bands are keyed in ONE pass (posexplode of the band-key array) so the
     self-join runs once on (band_idx, band_key) instead of ``bands`` separate
-    joins.  ``band_cap`` (default ON — boilerplate content shared by
-    thousands of docs would otherwise explode the bucket self-join
-    quadratically) bounds any band bucket via md5(id)-ranked row_number —
-    engine-portable, so a DuckDB oracle applying the same cap reproduces the
-    exact pair set.  The cap DOES drop rows in hot buckets: pass
-    return_metrics=True for the per-bucket truncation audit (a warning is
-    emitted when the audit is discarded), or band_cap=None for exhaustive
-    behavior.
+    joins.  ``band_cap`` (default ON: boilerplate content shared by
+    thousands of docs would otherwise explode the bucket self-join) caps
+    every band bucket (blocking.block_pairs); return_metrics=True adds the
+    cap audit.
     """
     keyed = minhash_band_index(signatures, n_hashes=n_hashes, bands=bands, id_col=id_col)
-    metrics = None
-    if band_cap is not None:
-        keyed, metrics = _cap_block(
-            keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
-        )
-        if not return_metrics:
-            _warn_cap_unaudited("minhash_band_pairs", band_cap, "band_cap")
-    l = keyed.select(F.col(id_col).alias("left_id"), "band_idx", "band_key")
-    r = keyed.select(F.col(id_col).alias("right_id"), "band_idx", "band_key")
-    out = (
-        l.join(r, ["band_idx", "band_key"])
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
+    pairs, audit = block_pairs(keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed)
+    out = pairs.select("left_id", "right_id").distinct()
+    return audited_result(
+        "minhash_band_pairs", out, audit, band_cap, return_metrics, "band_cap"
     )
-    if return_metrics:
-        if metrics is None:
-            metrics = signatures.sparkSession.createDataFrame([], CAP_METRICS_SCHEMA)
-        return out, metrics
-    return out
 
 
 def simhash64(
@@ -376,7 +336,7 @@ def simhash_band_pairs(
     bands: int = 4,
     id_col: str = "doc_id",
     block_cap: int | None = 1000,
-    cap_seed: int = 23120334,
+    cap_seed: int = DEFAULT_CAP_SEED,
     return_metrics: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Banded SimHash near-pairs with a RECALL GUARANTEE: split the 64-bit
@@ -398,9 +358,7 @@ def simhash_band_pairs(
 
     This is the primary near-dup pass; :func:`simhash_near_pairs` (single
     top-prefix probe) measured ~12% recall at hamming<=8 on the synthetic
-    corpus — fine as a cheap pre-screen, wrong as the only pass.  Same
-    ``block_cap`` discipline as every self-joining dedup operator (hot band
-    buckets are md5(id)-rank-capped, audited, engine-portable).
+    corpus — fine as a cheap pre-screen, wrong as the only pass.
     """
     if bands < 2 or bands > 64 or 64 % bands != 0:
         raise ValueError(f"bands={bands} must divide 64 and be in [2, 64]")
@@ -424,37 +382,18 @@ def simhash_band_pairs(
         F.col("simhash"),
         F.posexplode(band_arr).alias("band_idx", "band_key"),
     )
-    metrics = None
-    if block_cap is not None:
-        keyed, metrics = _cap_block(
-            keyed, ["band_idx", "band_key"], id_col, block_cap, cap_seed
-        )
-        if not return_metrics:
-            _warn_cap_unaudited("simhash_band_pairs", block_cap, "band_cap")
-    a = keyed.select(
-        F.col(id_col).alias("left_id"), F.col("simhash").alias("sa"),
-        "band_idx", "band_key",
-    )
-    b = keyed.select(
-        F.col(id_col).alias("right_id"), F.col("simhash").alias("sb"),
-        "band_idx", "band_key",
-    )
-    pairs = a.join(b, ["band_idx", "band_key"]).where(
-        F.col("left_id") < F.col("right_id")
+    pairs, audit = block_pairs(
+        keyed, ["band_idx", "band_key"], id_col, block_cap, cap_seed, carry=("simhash",)
     )
     out = (
         pairs.select(
             "left_id", "right_id",
-            F.bit_count(F.expr("sa ^ sb")).alias("hamming"),
+            F.bit_count(F.expr("l_simhash ^ r_simhash")).alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
         .distinct()  # a pair can share several bands
     )
-    if return_metrics:
-        if metrics is None:
-            metrics = sim.sparkSession.createDataFrame([], CAP_METRICS_SCHEMA)
-        return out, metrics
-    return out
+    return audited_result("simhash_band_pairs", out, audit, block_cap, return_metrics)
 
 
 def simhash_near_pairs(
@@ -463,7 +402,7 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     prefix_bits: int = 16,
     block_cap: int | None = 1000,
-    cap_seed: int = 23120334,
+    cap_seed: int = DEFAULT_CAP_SEED,
     return_metrics: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Near-dup pairs with hamming(simhash) <= max_hamming, blocked on the
@@ -472,37 +411,23 @@ def simhash_near_pairs(
     hamming<=8 on the synthetic corpus); use :func:`simhash_band_pairs`
     when recall matters.
 
-    ``block_cap`` bounds any prefix-bit bucket before the self-join — a
+    ``block_cap`` caps every prefix-bit bucket (blocking.block_pairs): a
     boilerplate-heavy corpus can drop thousands of docs into one 16-bit
-    bucket, going quadratic without it.  Ranking is md5(id)-ordered (stable
-    under any partitioning AND engine-portable, so a DuckDB oracle with the
-    same cap reproduces the exact pair set).  The cap DOES drop rows in hot
-    buckets: pass return_metrics=True for the per-bucket truncation audit (a
-    warning is emitted when the audit is discarded), or block_cap=None for
-    exhaustive behavior.
+    bucket.  return_metrics=True adds the cap audit.
     """
     keyed = sim.select(
         F.col(id_col),
         F.col("simhash"),
         F.expr(f"simhash >> {64 - prefix_bits}").alias("block"),
     )
-    metrics = None
-    if block_cap is not None:
-        keyed, metrics = _cap_block(keyed, ["block"], id_col, block_cap, cap_seed)
-        if not return_metrics:
-            _warn_cap_unaudited("simhash_near_pairs", block_cap)
-    a = keyed.select(F.col(id_col).alias("left_id"), F.col("simhash").alias("sa"), "block")
-    b = keyed.select(F.col(id_col).alias("right_id"), F.col("simhash").alias("sb"), "block")
-    pairs = a.join(b, "block").where(F.col("left_id") < F.col("right_id"))
-    hamming = F.bit_count(F.expr("sa ^ sb"))
+    pairs, audit = block_pairs(
+        keyed, ["block"], id_col, block_cap, cap_seed, carry=("simhash",)
+    )
+    hamming = F.bit_count(F.expr("l_simhash ^ r_simhash"))
     out = pairs.select(
         "left_id", "right_id", hamming.alias("hamming")
     ).where(F.col("hamming") <= max_hamming)
-    if return_metrics:
-        if metrics is None:
-            metrics = sim.sparkSession.createDataFrame([], CAP_METRICS_SCHEMA)
-        return out, metrics
-    return out
+    return audited_result("simhash_near_pairs", out, audit, block_cap, return_metrics)
 
 
 def embedding_near_dup(
@@ -540,20 +465,14 @@ def embedding_near_dup(
         ).alias("norm"),
         (block_expr if block_expr is not None else F.lit(0)).alias("block"),
     )
-    a = normed.select(
-        F.col(id_col).alias("left_id"), F.col(vec_col).alias("va"),
-        F.col("norm").alias("na"), "block",
-    )
-    b = normed.select(
-        F.col(id_col).alias("right_id"), F.col(vec_col).alias("vb"),
-        F.col("norm").alias("nb"), "block",
-    )
-    pairs = a.join(b, "block").where(F.col("left_id") < F.col("right_id"))
+    pairs, _ = block_pairs(normed, ["block"], id_col, carry=(vec_col, "norm"))
     dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+        F.zip_with(f"l_{vec_col}", f"r_{vec_col}", lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
     return (
-        pairs.withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 6))
+        pairs.withColumn("cosine", F.round(dot / (F.col("l_norm") * F.col("r_norm")), 6))
         .where(F.col("cosine") >= threshold)
         .select("left_id", "right_id", "cosine")
     )

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .blocking import block_pairs
+
 
 def pairwise_prf(predicted: DataFrame, truth: DataFrame) -> dict[str, float]:
     """predicted: (left_id, right_id) canonical match pairs;
@@ -123,13 +125,7 @@ def cluster_quality(
 ) -> dict[str, float]:
     """Pairwise P/R/F1 induced by cluster co-membership vs truth co-membership."""
     def co_pairs(df: DataFrame, id_col: str, grp_col: str) -> DataFrame:
-        a = df.select(F.col(id_col).alias("left_id"), F.col(grp_col).alias("g"))
-        b = df.select(F.col(id_col).alias("right_id"), F.col(grp_col).alias("g"))
-        return (
-            a.join(b, "g")
-            .where(F.col("left_id") < F.col("right_id"))
-            .select("left_id", "right_id")
-        )
+        return block_pairs(df, [grp_col], id_col)[0].select("left_id", "right_id")
 
     pred_pairs = co_pairs(clusters, "conv_id", "cluster_id")
     true_pairs = co_pairs(truth_membership, "conv_id", "entity_id").withColumn(

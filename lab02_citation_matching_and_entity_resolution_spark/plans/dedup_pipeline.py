@@ -32,8 +32,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.blocking import empty_cap_audit
 from ..operators.dedup import (
-    CAP_METRICS_SCHEMA,
     embedding_near_dup,
     minhash_band_pairs,
     minhash_signatures,
@@ -111,10 +111,6 @@ def _exact_pairs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def _empty_caps(docs: DataFrame) -> DataFrame:
-    return docs.sparkSession.createDataFrame([], CAP_METRICS_SCHEMA)
-
-
 def dedup_pass_pairs(
     docs: DataFrame,
     cfg: DedupConfig,
@@ -149,7 +145,7 @@ def dedup_pass_pairs(
     for name in cfg.passes:
         if name == "exact":
             pair_frames.append(tag(_exact_pairs(docs, cfg), "exact", None))
-            cap_frames.append(_empty_caps(docs))
+            cap_frames.append(empty_cap_audit(docs.sparkSession))
         elif name == "minhash":
             sigs = minhash_signatures(
                 docs,
@@ -236,7 +232,7 @@ def dedup_pass_pairs(
                 block_expr=F.col("cell_id"),
             )
             pair_frames.append(tag(p, "embedding", "cosine"))
-            cap_frames.append(_empty_caps(docs))
+            cap_frames.append(empty_cap_audit(docs.sparkSession))
             if cfg.embedding_audit:
                 # the corpus audits itself: query side = the same vectors,
                 # id renamed so the items x queries self-join keeps distinct

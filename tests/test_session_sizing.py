@@ -1,8 +1,11 @@
 """Driver-heap sizing from the host's memory limit (no JVM needed)."""
 
+import os
+
 from lab02_citation_matching_and_entity_resolution_spark.session import (
     cgroup_limit_files,
     driver_memory,
+    tmpfs_local_dir,
 )
 
 GIB = 1024**3
@@ -80,3 +83,11 @@ def test_cgroup_limit_files_follow_proc_self_cgroup(tmp_path):
     # an unreadable /proc file still yields the hierarchy roots
     roots = cgroup_limit_files(proc_cgroup=str(tmp_path / "missing"), root="/cg")
     assert roots == [("cgroup v2", "/cg/memory.max"), ("cgroup v1", "/cg/memory/memory.limit_in_bytes")]
+
+
+def test_tmpfs_local_dir_needs_free_space(tmp_path):
+    st = os.statvfs(tmp_path)
+    free = st.f_bavail * st.f_frsize
+    assert tmpfs_local_dir(free // 2, shm=str(tmp_path)) == str(tmp_path / "spark-local")
+    assert tmpfs_local_dir(free + GIB, shm=str(tmp_path)) is None
+    assert tmpfs_local_dir(0, shm=str(tmp_path / "absent")) is None

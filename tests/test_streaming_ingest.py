@@ -454,3 +454,48 @@ def test_band_index_legacy_layout_refused(spark, tmp_path):
                                  "conv_id string, doc_text string")
     with pytest.raises(RuntimeError, match="legacy conv_bucket layout"):
         flag_near_dups(store, docs, docs.select("conv_id"))
+
+
+def test_cli_stream_drain_is_bounded_per_trigger(spark, tmp_path):
+    """cli --stream-input drains a backlog larger than the per-trigger file
+    bound in more than one micro-batch, and the live table still equals a
+    batch assemble_documents of every turn (conversations span batches)."""
+    import argparse
+
+    from lab02_citation_matching_and_entity_resolution_spark.cli import _run_stream
+    from lab02_citation_matching_and_entity_resolution_spark.streaming.ingest import (
+        DRAIN_MAX_FILES_PER_TRIGGER,
+    )
+
+    src = str(tmp_path / "incoming")
+    out = str(tmp_path / "out")
+    turns = []
+    for i in range(DRAIN_MAX_FILES_PER_TRIGGER + 1):
+        rows = [{
+            "conv_id": f"c{i % 3}", "turn_idx": i // 3,
+            "role": "user" if i % 2 == 0 else "assistant",
+            "text": f"backlog turn number {i}", "tool": None,
+            "ts": f"2026-01-01T{10 + i // 60:02d}:{i % 60:02d}:00",
+        }]
+        _write_turns(src, f"part_{i:03d}.jsonl", rows)
+        turns += rows
+
+    args = argparse.Namespace(
+        stream_input=src, output=out, stream_near_dups=False,
+        stream_stats=False, stream_gap_seconds=1800,
+    )
+    _run_stream(spark, TableStore(spark, out), args)
+
+    commits = os.listdir(os.path.join(out, "_stream_ckpt", "commits"))
+    assert len([c for c in commits if not c.startswith(".")]) > 1, commits
+    all_turns = spark.createDataFrame(
+        [tuple(r.values()) for r in turns],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    expected = assemble_documents(all_turns)
+    live = {
+        r["conv_id"]: r
+        for r in TableStore(spark, out).read("documents_live").select(*expected.columns).collect()
+    }
+    want = {r["conv_id"]: r for r in expected.collect()}
+    assert live == want

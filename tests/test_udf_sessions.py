@@ -50,7 +50,7 @@ def test_udfs_work_in_a_second_session(tmp_path):
         os.environ,
         PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])),
         SPARK_GRAFT_DRIVER_MEM="1g",
-        SPARK_GRAFT_LOCAL_DIR=str(tmp_path),
+        SPARK_LOCAL_DIRS=str(tmp_path),
     )
     proc = subprocess.run(
         [sys.executable, "-c", SCRIPT],
