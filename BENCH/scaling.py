@@ -183,14 +183,20 @@ def run_at(cores: int, data_dir: str = DATA_DIR, retries: int = 1) -> dict:
         # slots, and on a quiet box the 2-core leg leaks 3-4 extra cores of
         # GC/Python/IO work, silently deflating measured scaling.  taskset is
         # the faithful N-core-executor emulation.  The pin set is SPREAD
-        # across the visible CPU range: a measured hypervisor artifact makes
+        # across the CPUs this process may run on (its affinity mask, never
+        # a CPU outside it): a measured hypervisor artifact makes
         # contiguous low-numbered vCPUs ~2x slower than evenly-spaced ones
         # for the same count (diagnostic in BENCH/BASELINE.md), so both
         # levels use the same spread policy for a fair ratio.
         if shutil.which("taskset") and os.environ.get("SPARK_GRAFT_SCALING_PIN", "1") == "1":
-            total = os.cpu_count() or cores
-            step = max(1, total // cores)
-            pins = ",".join(str(i * step) for i in range(cores))
+            allowed = sorted(os.sched_getaffinity(0))
+            if cores > len(allowed):
+                # fewer pins than the level would report a false scaling ratio
+                raise ValueError(
+                    f"level {cores} exceeds the {len(allowed)} CPUs this process may use"
+                )
+            step = max(1, len(allowed) // cores)
+            pins = ",".join(str(c) for c in allowed[::step][:cores])
             cmd = ["taskset", "-c", pins] + cmd
         out = subprocess.run(
             cmd,

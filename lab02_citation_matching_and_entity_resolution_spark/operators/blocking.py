@@ -49,7 +49,6 @@ class BlockingConfig:
     token_prefix_len: int = 48      # chars of normalized doc_text in the token key
     block_cap: int = DEFAULT_BLOCK_CAP
     seed: int = DEFAULT_CAP_SEED
-    minhash_enabled: bool = True
     minhash_tables: int = 6         # LSH bands
     minhash_rows: int = 4           # minhashes per band (s-curve knee ~0.64)
     passes: tuple[str, ...] = ("token", "signature", "minhash")
@@ -220,7 +219,7 @@ def keyed_passes(docs: DataFrame, cfg: BlockingConfig):
             keyed, ["block_key"], "conv_id", cfg.block_cap, cfg.seed, rank="xxhash64"
         )
         out.append(("signature", capped, m.withColumn("block_pass", F.lit("signature"))))
-    if "minhash" in cfg.passes and cfg.minhash_enabled:
+    if "minhash" in cfg.passes:
         from .dedup import minhash_band_index
 
         # Native banded MinHash-LSH (token explode -> salted-min signature ->

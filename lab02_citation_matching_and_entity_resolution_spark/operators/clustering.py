@@ -77,7 +77,8 @@ def connected_components(
     max_hot_keys: int = 100_000,
 ) -> DataFrame:
     """Edges (left_id, right_id) -> (conv_id, cluster_id) with cluster_id =
-    min member id of the component.  ``vertices`` adds singletons.
+    min member id of the component.  ``vertices`` adds singletons: the
+    output covers edge endpoints ∪ vertices.
 
     ``stats`` (optional dict) receives {"rounds": n, "hot_keys": n,
     "salt_buckets": n} — observability for the rehearsal/metrics sinks
@@ -100,11 +101,13 @@ def connected_components(
         # not re-run the whole scoring pipeline every round
         .localCheckpoint()
     )
+    # vertex set = edge endpoints ∪ ``vertices``: an endpoint missing from
+    # ``vertices`` must still carry (and pass on) a label, as in the star
+    # algorithm, or the answer would depend on which algorithm ran
+    verts = sym.select("src")
     if vertices is not None:
-        verts = vertices.select(F.col(id_col).alias("src")).distinct()
-    else:
-        verts = sym.select("src").distinct()
-    labels = verts.withColumn("label", F.col("src")).localCheckpoint()
+        verts = verts.unionByName(vertices.select(F.col(id_col).alias("src")))
+    labels = verts.distinct().withColumn("label", F.col("src")).localCheckpoint()
 
     if salt_buckets < 1:
         raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
@@ -286,7 +289,7 @@ def connected_components_star(
     if vertices is not None:
         verts = vertices.select(F.col(id_col).alias("u")).distinct()
         labels = (
-            verts.join(labels, "u", "left")
+            verts.join(labels, "u", "full")
             .select(F.col("u"), F.coalesce("label", F.col("u")).alias("label"))
         )
     return labels.select(F.col("u").alias(id_col), F.col("label").alias("cluster_id"))

@@ -229,8 +229,10 @@ def incremental_band_pairs(
 
     ``band_cap`` bounds BOTH sides' buckets (a hot boilerplate bucket in
     the standing index would otherwise fan every matching new doc into
-    thousands of pairs), md5-ranked as in blocking.block_pairs; rows where
-    the same id appears on both sides (re-ingest) are excluded.  A
+    thousands of pairs), md5-ranked as in blocking.block_pairs; only the
+    corpus buckets the batch shares are capped, so the audit names just the
+    buckets whose truncation can drop a pair.  Rows where the same id
+    appears on both sides (re-ingest) are excluded.  A
     new-vs-corpus cross join, not a self-join, so it joins the two sides
     itself.
     """
@@ -241,8 +243,11 @@ def incremental_band_pairs(
         new_keyed, m_new = _cap_block(
             new_keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
         )
+        shared = corpus_keyed.join(
+            new_keyed.select("band_idx", "band_key"), ["band_idx", "band_key"], "left_semi"
+        )
         corpus_keyed, m_corp = _cap_block(
-            corpus_keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
+            shared, ["band_idx", "band_key"], id_col, band_cap, cap_seed
         )
         audit = m_new.unionByName(m_corp)
     l = new_keyed.select(F.col(id_col).alias("left_id"), "band_idx", "band_key")
@@ -500,23 +505,14 @@ def near_dup_groups(
 
     ``docs`` (optional) adds singleton rows for ids with no near-dup pair
     (group of themselves, keeper=true) so the output is a complete
-    keep/drop assignment for the corpus.  Ids appearing in ``pairs`` but
-    absent from ``docs`` stay in the vertex set — a pair id can never be
-    dropped, because a missing intermediate vertex would both truncate its
-    component's closure and make the propagation and star algorithms
-    disagree (propagation cannot route min labels through an absent
-    vertex).  Closure runs on connected_components_auto: propagation for
-    the near-clique common case, one automatic fallback to O(log n) star
-    rounds for pathological chains (recorded in ``stats``).
+    keep/drop assignment for the corpus.  Closure runs on
+    connected_components_auto: propagation for the near-clique common case,
+    one automatic fallback to O(log n) star rounds for pathological chains
+    (recorded in ``stats``).
     """
     from .clustering import connected_components_auto
 
-    vertices = None
-    if docs is not None:
-        pair_ids = pairs.select(F.col("left_id").alias("doc_id")).unionByName(
-            pairs.select(F.col("right_id").alias("doc_id"))
-        )
-        vertices = docs.select(F.col(id_col).alias("doc_id")).unionByName(pair_ids)
+    vertices = None if docs is None else docs.select(F.col(id_col).alias("doc_id"))
     labeled = connected_components_auto(
         pairs.select("left_id", "right_id"),
         vertices=vertices,

@@ -56,16 +56,12 @@ def score_pairs_rule(feat: DataFrame) -> DataFrame:
     Exact short-circuit: pair_features frames carry (l_text_sig, l_text_len)
     — an (xxhash64, length) witness of full-text equality that avoids
     shipping document text across the pair joins (round-5 rehearsal: text
-    was a leading term of the 21.9 GB score-stage shuffle).  Frames built
-    elsewhere may still carry raw l_text/r_text; both shapes are accepted."""
-    if "l_text_sig" in feat.columns:
-        exact = (
-            (F.col("l_text_sig") == F.col("r_text_sig"))
-            & (F.col("l_text_len") == F.col("r_text_len"))
-            & (F.col("l_text_len") > 0)
-        )
-    else:
-        exact = (F.col("l_text") == F.col("r_text")) & (F.length("l_text") > 0)
+    was a leading term of the 21.9 GB score-stage shuffle)."""
+    exact = (
+        (F.col("l_text_sig") == F.col("r_text_sig"))
+        & (F.col("l_text_len") == F.col("r_text_len"))
+        & (F.col("l_text_len") > 0)
+    )
     year_close = (
         F.when(
             F.col("l_year").isNotNull()

@@ -93,7 +93,8 @@ class TableStore:
     def exists(self, name: str) -> bool:
         if self._use_iceberg():
             return self.spark.catalog.tableExists(f"{self.catalog}.{name}")
-        return os.path.isdir(self._path(name))
+        fs, path = self._fs_path(self._path(name))
+        return bool(fs.exists(path))
 
     def read(self, name: str) -> DataFrame:
         if self._use_iceberg():
@@ -139,100 +140,62 @@ class TableStore:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(name))
 
-    def merge_upsert(self, df: DataFrame, name: str, key_cols: list[str]):
-        """M8 MERGE semantics — per-key upsert, not append (the reference
-        UPDATES existing per-paper pred.json files in place,
-        ref: src/modeling_utils.py:391-481).
-
-        Iceberg (the scale path): a real MERGE INTO — matched keys update,
-        new keys insert; snapshot-isolated, no table rewrite.
-
-        Parquet fallback: keep = existing ANTI-JOIN updates on key, result =
-        keep UNION updates, written to a sibling tmp dir then atomically
-        swapped in (reading lazily from the same path being overwritten
-        would corrupt the table).  This rewrites the table — fine for the
-        sandbox, documented as the reason Iceberg is the 100 TB substrate.
-        """
-        if self._use_iceberg():
-            if not self.exists(name):
-                # first upsert bootstraps the table (MERGE INTO on a
-                # non-existent table is an AnalysisException)
-                df.writeTo(f"{self.catalog}.{name}").using("iceberg").create()
-                return
-            view = f"_merge_src_{name}"
-            df.createOrReplaceTempView(view)
-            on = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-            self.spark.sql(
-                f"MERGE INTO {self.catalog}.{name} t USING {view} s ON {on} "
-                "WHEN MATCHED THEN UPDATE SET * "
-                "WHEN NOT MATCHED THEN INSERT *"
-            )
-            return
-        if not self.exists(name):
-            df.write.mode("overwrite").parquet(self._path(name))
-            return
-        import shutil
-        import uuid
-
-        existing = self.spark.read.parquet(self._path(name))
-        keep = existing.join(df.select(*key_cols), key_cols, "left_anti")
-        result = keep.unionByName(df)
-        token = uuid.uuid4().hex[:8]
-        tmp = self._path(f"{name}.__merge_{token}")
-        result.write.mode("overwrite").parquet(tmp)
-        final = self._path(name)
-        # two renames, never a window with no table: old -> trash, tmp ->
-        # final, then drop trash.  A crash leaves either the old or the new
-        # table in place (plus at worst an orphan dir), never neither.
-        trash = self._path(f"{name}.__old_{token}")
-        os.replace(final, trash)
-        os.replace(tmp, final)
-        shutil.rmtree(trash)
-
     def merge_upsert_partitioned(
-        self, df: DataFrame, name: str, key_cols: list[str], partition_col: str
+        self, df: DataFrame, name: str, key_cols: list[str], partition_col: str,
+        extra_partition_vals: tuple = (),
     ):
-        """Per-key upsert where ``df`` touches only a subset of
-        ``partition_col`` values: only those partitions are rewritten,
-        bounding merge cost to the touched partitions instead of the table
-        (the plain parquet ``merge_upsert`` rewrites everything — fine for a
-        one-off, a scale bug inside a per-batch streaming loop).
+        """M8 MERGE semantics, the one keyed write: per-key upsert (matched
+        keys update, new keys insert; the reference UPDATES existing
+        per-paper pred.json files in place, ref: src/modeling_utils.py:
+        391-481) that rewrites only the touched ``partition_col`` partitions
+        — the partitions of ``df``'s rows plus ``extra_partition_vals`` —
+        bounding merge cost to those partitions instead of the table.
 
-        PRECONDITION (caller's contract, not validated here): partition_col
-        must be a deterministic function of key_cols — a key's new row must
-        land in the same partition as its old row, otherwise the
-        partition-filtered anti-join cannot see the old row and the "upsert"
-        leaves duplicate keys.  The streaming caller satisfies this by
-        construction (conv_bucket = pmod(xxhash64(conv_id), n)).
+        PRECONDITION (caller's contract, not validated here): every stored
+        row of a key in ``df`` lives in a touched partition, otherwise the
+        partition-bounded anti-join cannot see the old row and the "upsert"
+        leaves duplicate keys.  Either ``partition_col`` is a deterministic
+        function of ``key_cols`` (conv_bucket = pmod(xxhash64(conv_id), n),
+        or ``lineage.partition_key_col`` of a key column), or the caller
+        passes the old rows' partitions as ``extra_partition_vals`` (the
+        streaming band index, bucketed by band-key hash: a re-signed
+        conversation's (conv_id, band_idx) rows move between buckets).
 
-        Iceberg: MERGE INTO whose ON clause carries the partition column
-        BOTH as an s-side equality AND as a literal IN list of the touched
-        values (bounded by the partition count, e.g. 64 conv buckets) — the
-        key-only ON clause of plain merge_upsert gives Iceberg nothing to
-        statically prune the target scan with, so "cost bounded to touched
-        partitions" would not hold on exactly the documented scale substrate
-        (round-4 ADVICE).  The bootstrap CREATE declares the partition spec
-        so the engine can prune.  Parquet: read ONLY the touched
-        partitions,
-        anti-join out updated keys, union the new rows, localCheckpoint to
-        sever lineage from the files about to be replaced (reading lazily
-        from a path being overwritten corrupts the table), then
-        dynamic-partition-overwrite exactly those partitions.  A crash
-        mid-overwrite can leave a subset of touched partitions new and the
-        rest old; the streaming caller's batch REPLAY re-merges the same
-        rows, which converges because the merge is idempotent per key.
+        Iceberg: one MERGE INTO whose ON clause carries the key equality and
+        a literal IN list of the touched partition values (bounded by the
+        partition count, e.g. 64 buckets) so Iceberg statically prunes the
+        target scan (round-4 ADVICE: a key-only ON clause voids the bounded
+        cost on the documented scale substrate).  Without extra partitions
+        the partition is a function of the key, so ``t.p = s.p`` is added
+        too; with them a matched row may move partition, so it is not.  The
+        bootstrap CREATE declares the partition spec so the engine can
+        prune.
+
+        Parquet: read ONLY the touched partitions, anti-join out the updated
+        keys, union the new rows, localCheckpoint to sever lineage from the
+        files about to be replaced (reading lazily from a path being
+        overwritten corrupts the table), then dynamic-partition-overwrite
+        exactly those partitions.  Dynamic overwrite only rewrites
+        partitions present in the result, so an extra partition whose only
+        rows moved out (the one kind that can come out empty) is deleted
+        through the Hadoop FileSystem of its path — no local-filesystem
+        call, so the write path holds on object stores too.  A crash
+        mid-write can leave a subset of touched partitions new and the rest
+        old; the streaming caller's batch REPLAY re-merges the same rows,
+        which converges because the merge is idempotent per key.
         """
+        from pyspark.sql.functions import col
+
         # ONE bounded driver-side collect up front (one row per touched
         # partition), validating NULL-freedom on EVERY path INCLUDING the
         # bootstrap writes: a NULL-partition row written at bootstrap could
         # never be upserted afterwards (every later merge of that key would
         # refuse), so it must be refused before anything lands on disk
-        vals = [r[0] for r in df.select(partition_col).distinct().collect()]
+        own = [r[0] for r in df.select(partition_col).distinct().collect()]
+        vals = sorted(set(own) | set(extra_partition_vals), key=str)
         _check_partition_values(vals, partition_col)
         if self._use_iceberg():
             if not self.exists(name):
-                from pyspark.sql.functions import col
-
                 (
                     df.writeTo(f"{self.catalog}.{name}")
                     .using("iceberg")
@@ -243,9 +206,10 @@ class TableStore:
             view = f"_merge_src_{name}"
             df.createOrReplaceTempView(view)
             on = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-            on += f" AND t.{partition_col} = s.{partition_col}"
+            if not extra_partition_vals:
+                on += f" AND t.{partition_col} = s.{partition_col}"
             if vals:
-                lits = ", ".join(_sql_literal(v) for v in sorted(vals, key=str))
+                lits = ", ".join(_sql_literal(v) for v in vals)
                 on += f" AND t.{partition_col} IN ({lits})"
             self.spark.sql(
                 f"MERGE INTO {self.catalog}.{name} t USING {view} s ON {on} "
@@ -253,8 +217,6 @@ class TableStore:
                 "WHEN NOT MATCHED THEN INSERT *"
             )
             return
-        from pyspark.sql.functions import col
-
         if not self.exists(name):
             df.write.mode("overwrite").partitionBy(partition_col).parquet(self._path(name))
             return
@@ -262,88 +224,29 @@ class TableStore:
         keep = existing.join(df.select(*key_cols).distinct(), key_cols, "left_anti")
         result = keep.unionByName(df).localCheckpoint(eager=True)
         self.overwrite_partitions(result, name, [partition_col])
+        movable = set(extra_partition_vals) - set(own)
+        if movable:
+            present = {
+                r[0]
+                for r in result.where(col(partition_col).isin(list(movable)))
+                .select(partition_col).distinct().collect()
+            }
+            for v in movable - present:
+                fs, path = self._fs_path(f"{self._path(name)}/{partition_col}={v}")
+                fs.delete(path, True)  # recursive; a missing path is a no-op
 
-    def replace_groups_partitioned(
-        self,
-        df: DataFrame,
-        name: str,
-        group_col: str,
-        partition_col: str,
-        extra_partition_vals: tuple = (),
-    ):
-        """Replace EVERY row of each ``group_col`` value present in ``df``,
-        rewriting only the touched ``partition_col`` partitions.
-
-        The upsert variant for indexes whose partition column is NOT a
-        function of the merge key: an LSH band index bucketed by band-key
-        hash re-signs a conversation into buckets its OLD rows may not
-        occupy, so key-equality within the new rows' partitions cannot find
-        them.  The caller locates the old rows' partitions (bounded work —
-        recompute the group's previous band keys) and passes them as
-        ``extra_partition_vals``; all rows of the touched groups inside the
-        touched partitions are dropped, then ``df`` is inserted.  Replay of
-        the same ``df`` converges (the rewrite is idempotent per group).
-
-        Parquet: read touched partitions, anti-join on ``group_col``,
-        union, localCheckpoint (sever lineage from files being replaced),
-        dynamic-partition overwrite.  Iceberg: partition-pruned DELETE of
-        the touched groups, then append — two transactions; a crash between
-        them loses the groups' rows until the streaming caller's batch
-        replay re-runs both (documented crash window, same convergence
-        argument as merge_upsert_partitioned's partial overwrite).
-        """
-        vals = sorted(
-            {r[0] for r in df.select(partition_col).distinct().collect()}
-            | set(extra_partition_vals),
-            key=str,
-        )
-        _check_partition_values(vals, partition_col)
-        from pyspark.sql.functions import col
-
-        if self._use_iceberg():
-            if not self.exists(name):
-                (
-                    df.writeTo(f"{self.catalog}.{name}")
-                    .using("iceberg")
-                    .partitionedBy(col(partition_col))
-                    .create()
-                )
-                return
-            view = f"_replace_src_{name}"
-            df.createOrReplaceTempView(view)
-            lits = ", ".join(_sql_literal(v) for v in vals)
-            self.spark.sql(
-                f"DELETE FROM {self.catalog}.{name} "
-                f"WHERE {partition_col} IN ({lits}) "
-                f"AND {group_col} IN (SELECT {group_col} FROM {view})"
-            )
-            df.writeTo(f"{self.catalog}.{name}").append()
-            return
-        if not self.exists(name):
-            df.write.mode("overwrite").partitionBy(partition_col).parquet(self._path(name))
-            return
-        existing = self.read(name).where(col(partition_col).isin(vals))
-        keep = existing.join(df.select(group_col).distinct(), group_col, "left_anti")
-        result = keep.unionByName(df).localCheckpoint(eager=True)
-        # dynamic overwrite only rewrites partitions PRESENT in result — a
-        # touched partition whose only rows belonged to the replaced groups
-        # comes out empty and would silently keep its old file; drop it
-        # explicitly (bounded: one directory per touched-and-now-empty value)
-        present = {r[0] for r in result.select(partition_col).distinct().collect()}
-        if present:
-            self.overwrite_partitions(result, name, [partition_col])
-        import shutil
-
-        for v in vals:
-            if v not in present:
-                d = os.path.join(self._path(name), f"{partition_col}={v}")
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
+    def _fs_path(self, path: str):
+        """(Hadoop FileSystem, Path) of ``path``: local, HDFS or an object
+        store alike, so no store call is tied to the local filesystem."""
+        p = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
 
     def overwrite_partitions(self, df: DataFrame, name: str, partition_by: list[str]):
         """Replace only the partitions present in ``df`` — the resume
         substrate (Iceberg overwritePartitions / dynamic parquet overwrite)."""
         if self._use_iceberg():
+            if not self.exists(name):  # overwritePartitions needs the table
+                return self.append(df, name, partition_by)
             df.writeTo(f"{self.catalog}.{name}").overwritePartitions()
             return
         prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")

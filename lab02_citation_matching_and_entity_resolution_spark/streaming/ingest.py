@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
+from ..plans.lineage import partition_key_col
 from ..sources.tables import TableStore
 
 TRANSCRIPT_DDL = (
@@ -63,6 +64,7 @@ TURNS_TABLE = "turns_raw"
 DOCS_TABLE = "documents_live"
 BAND_INDEX_TABLE = "dedup_band_index"
 NEAR_DUP_TABLE = "near_dup_flags"
+NEAR_DUP_CAP_TABLE = "near_dup_cap_metrics"
 N_CONV_BUCKETS = 64
 # band-index partitioning: pmod(xxhash64(band_key), N_BAND_BUCKETS).  The
 # match join is on (band_idx, band_key), so bucketing by band-key hash lets
@@ -82,14 +84,32 @@ N_BAND_BUCKETS = 64
 DRAIN_MAX_FILES_PER_TRIGGER = 64
 
 
-def conv_bucket_expr(n_buckets: int = N_CONV_BUCKETS) -> F.Column:
-    """Deterministic conversation bucket: pmod(xxhash64(conv_id), n)."""
-    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+def _distinct(df: DataFrame, bucket_col: str) -> list[int]:
+    """Bounded driver-side collect: the distinct values of a bucket column
+    (at most the table's bucket count)."""
+    return [r[0] for r in df.select(bucket_col).distinct().collect()]
 
 
-def band_bucket_expr(n_buckets: int = N_BAND_BUCKETS) -> F.Column:
-    """Deterministic band bucket: pmod(xxhash64(band_key), n)."""
-    return F.pmod(F.xxhash64("band_key"), F.lit(n_buckets)).cast("int")
+def pruned_read(
+    store: TableStore,
+    table: str,
+    bucket_col: str,
+    buckets: list[int],
+    affected: DataFrame,
+    how: str = "left_semi",
+) -> DataFrame:
+    """The one per-batch read of a bucketed table: filter on the touched
+    bucket set, then broadcast-join on the batch's conversations
+    (``left_semi`` keeps them, ``left_anti`` drops them).  The bucket filter
+    is a partition-value filter, so the parquet (or Iceberg partition-spec)
+    SCAN prunes to the touched partitions — per-batch cost O(touched
+    buckets), never a full-table read; the broadcast join bounds the JOIN to
+    the batch's conversations."""
+    return (
+        store.read(table)
+        .where(F.col(bucket_col).isin(buckets))
+        .join(F.broadcast(affected), "conv_id", how)
+    )
 
 
 def pruned_band_index(
@@ -98,19 +118,13 @@ def pruned_band_index(
     band_buckets: list[int],
     affected: DataFrame,
 ) -> DataFrame:
-    """Standing-index rows restricted to the touched band buckets, with the
-    batch's own (now stale) rows anti-joined out.  The bucket filter prunes
-    the parquet (or Iceberg partition-spec) SCAN to the touched partitions —
-    the batch's band keys are known before the join, so the read is
-    O(touched buckets), never a full corpus-index scan.  Standalone so the
-    plan test can assert PartitionFilters on exactly this read (mirror of
-    pruned_history)."""
-    idx = store.read(band_index_table)
-    if "band_bucket" in idx.columns:
-        idx = idx.where(F.col("band_bucket").isin(band_buckets))
-    return idx.join(F.broadcast(affected), "conv_id", "left_anti").select(
-        "conv_id", "band_idx", "band_key"
-    )
+    """Standing-index rows at the batch's band buckets, with the batch's
+    own (now stale) rows anti-joined out — a re-assembled conversation must
+    match the corpus, not its previous self.  PartitionFilters on this read
+    are pinned by a plan test."""
+    return pruned_read(
+        store, band_index_table, "band_bucket", band_buckets, affected, "left_anti"
+    ).select("conv_id", "band_idx", "band_key")
 
 
 def pruned_history(
@@ -119,15 +133,14 @@ def pruned_history(
     affected: DataFrame,
     buckets: list[int],
 ) -> DataFrame:
-    """Full turn history of the touched conversations, with the scan pruned
-    to the touched conv_bucket partitions.  Kept as a standalone function so
-    the plan test can assert PartitionFilters on exactly this read."""
-    history = store.read(turns_table)
-    if "conv_bucket" in history.columns:
-        # partition-value filter -> parquet directory pruning (the scan reads
-        # only the touched buckets, not the table)
-        history = history.where(F.col("conv_bucket").isin(buckets)).drop("conv_bucket")
-    return history.join(F.broadcast(affected), "conv_id", "left_semi").dropDuplicates()
+    """Full turn history of the touched conversations, read at the touched
+    conv_bucket partitions only.  PartitionFilters on this read are pinned
+    by a plan test."""
+    return (
+        pruned_read(store, turns_table, "conv_bucket", buckets, affected)
+        .drop("conv_bucket")
+        .dropDuplicates()
+    )
 
 
 def read_transcript_stream(
@@ -250,8 +263,9 @@ def flag_near_dups(
     text_col: str = "doc_text",
     prev_docs: DataFrame | None = None,
     n_band_buckets: int = N_BAND_BUCKETS,
+    batch_id: int = 0,
 ) -> None:
-    """Incremental near-dup flagging for one ingest micro-batch.
+    """Incremental near-dup flagging for micro-batch ``batch_id``.
 
     The operator incremental_band_pairs (dedup.py) exists FOR this loop:
     the standing corpus is banded once into a persisted index and each batch
@@ -269,14 +283,16 @@ def flag_near_dups(
       3. Intra-batch pairs: minhash_band_pairs on the batch alone (the
          incremental operator deliberately excludes these — composability).
       4. Upsert flags keyed by (left_id, right_id), conv-bucketed (write-only
-         table: partition must be a function of the key).  Replace the
-         batch's index rows group-wise by conv_id
-         (TableStore.replace_groups_partitioned): a re-signed conversation's
-         OLD rows live in band buckets its new rows may not touch, so the
-         caller passes ``prev_docs`` (the conversations' PREVIOUS documents,
-         read bucket-pruned before the docs upsert) and their old band
-         buckets are recomputed exactly — bounded work, exact replacement,
-         replay-idempotent.
+         table: partition must be a function of the key), and both pair
+         generators' cap audits, tagged with their ``origin``, into the
+         ``batch_id`` partition of NEAR_DUP_CAP_TABLE.
+         Upsert the batch's index rows keyed by
+         (conv_id, band_idx) (TableStore.merge_upsert_partitioned): a
+         re-signed conversation's OLD rows live in band buckets its new
+         rows may not touch, so the caller passes ``prev_docs`` (the
+         conversations' PREVIOUS documents, read bucket-pruned before the
+         docs upsert), their old band buckets are recomputed exactly and
+         rewritten too — bounded work, exact replacement, replay-idempotent.
 
     Index layout: bucket-partitioned by ``band_bucket =
     pmod(xxhash64(band_key), n_band_buckets)`` — the match join's key —
@@ -306,61 +322,66 @@ def flag_near_dups(
             "create_or_replace(partition_by=['band_bucket'])."
         )
 
-    sigs = minhash_signatures(
-        batch_docs, n_hashes=n_hashes, shingle_n=shingle_n,
-        id_col="conv_id", text_col=text_col, hash_fn="xxhash64",
-    ).persist()
-    try:
-        new_index = minhash_band_index(
+    def signatures(docs: DataFrame) -> DataFrame:
+        return minhash_signatures(
+            docs, n_hashes=n_hashes, shingle_n=shingle_n,
+            id_col="conv_id", text_col=text_col, hash_fn="xxhash64",
+        )
+
+    def band_index(sigs: DataFrame) -> DataFrame:
+        return minhash_band_index(
             sigs, n_hashes=n_hashes, bands=bands, id_col="conv_id"
-        ).withColumn("band_bucket", band_bucket_expr(n_band_buckets))
-        intra = minhash_band_pairs(
+        ).withColumn("band_bucket", partition_key_col("band_key", n_band_buckets))
+
+    sigs = signatures(batch_docs).persist()
+    try:
+        new_index = band_index(sigs)
+        intra, batch_caps = minhash_band_pairs(
             sigs, n_hashes=n_hashes, bands=bands, id_col="conv_id",
             band_cap=band_cap, return_metrics=True,
-        )[0].select("left_id", "right_id", F.lit("batch").alias("origin"))
-        # bounded driver-side collect: at most n_band_buckets distinct values
-        batch_buckets = [
-            r[0] for r in new_index.select("band_bucket").distinct().collect()
-        ]
+        )
+        flags = intra.select("left_id", "right_id", F.lit("batch").alias("origin"))
+        caps = batch_caps.withColumn("origin", F.lit("batch"))
         if store.exists(band_index_table):
             corpus = pruned_band_index(
-                store, band_index_table, batch_buckets, affected
+                store, band_index_table, _distinct(new_index, "band_bucket"), affected
             )
-            cross = incremental_band_pairs(
+            cross, cross_caps = incremental_band_pairs(
                 sigs, corpus, n_hashes=n_hashes, bands=bands, id_col="conv_id",
                 band_cap=band_cap, return_metrics=True,
-            )[0].select("left_id", "right_id", F.lit("cross").alias("origin"))
-            flags = intra.unionByName(cross)
-        else:
-            flags = intra
-        flags = flags.withColumn(
-            "conv_bucket",
-            F.pmod(F.xxhash64("left_id"), F.lit(n_buckets)).cast("int"),
-        )
+            )
+            flags = flags.unionByName(
+                cross.select("left_id", "right_id", F.lit("cross").alias("origin"))
+            )
+            # the batch side of the cross join is capped exactly as the
+            # intra-batch generator caps it (same bands, cap and seed), so
+            # only the standing-index rows are new audit rows
+            cross_caps = cross_caps.exceptAll(batch_caps)
+            caps = caps.unionByName(cross_caps.withColumn("origin", F.lit("cross")))
+        flags = flags.withColumn("conv_bucket", partition_key_col("left_id", n_buckets))
         if flags.take(1):
             store.merge_upsert_partitioned(
                 flags, near_dup_table,
                 key_cols=["left_id", "right_id"], partition_col="conv_bucket",
             )
+        # a truncated hot bucket is recorded, never silent: one row per
+        # capped bucket, as the dedup CLI records dedup_cap_metrics, in the
+        # batch's own partition, which a replayed batch replaces
+        caps = caps.withColumn("batch_id", F.lit(batch_id)).localCheckpoint()
+        if caps.take(1):
+            store.overwrite_partitions(caps, NEAR_DUP_CAP_TABLE, ["batch_id"])
         # locate the affected conversations' OLD index rows: recompute their
         # previous band keys from prev_docs (exact — same signature pipeline
-        # that wrote them) so replace_groups_partitioned also rewrites those
-        # buckets.  Bounded: O(batch conversations).
+        # that wrote them) so the upsert also rewrites those buckets.
+        # Bounded: O(batch conversations).
         old_buckets: list[int] = []
         if prev_docs is not None and store.exists(band_index_table):
-            old_index = minhash_band_index(
-                minhash_signatures(
-                    prev_docs, n_hashes=n_hashes, shingle_n=shingle_n,
-                    id_col="conv_id", text_col=text_col, hash_fn="xxhash64",
-                ),
-                n_hashes=n_hashes, bands=bands, id_col="conv_id",
-            ).withColumn("band_bucket", band_bucket_expr(n_band_buckets))
-            old_buckets = [
-                r[0] for r in old_index.select("band_bucket").distinct().collect()
-            ]
-        store.replace_groups_partitioned(
+            old_buckets = _distinct(band_index(signatures(prev_docs)), "band_bucket")
+        # every signed conversation has exactly ``bands`` rows, so keying
+        # on (conv_id, band_idx) replaces all of its old rows
+        store.merge_upsert_partitioned(
             new_index, band_index_table,
-            group_col="conv_id", partition_col="band_bucket",
+            key_cols=["conv_id", "band_idx"], partition_col="band_bucket",
             extra_partition_vals=tuple(old_buckets),
         )
     finally:
@@ -385,14 +406,15 @@ def incremental_assemble(
         if not checked:
             _check_bucket_layout(store, turns_table, n_buckets)
             checked = True
-        batch_df = batch_df.withColumn("conv_bucket", conv_bucket_expr(n_buckets)).persist()
+        batch_df = batch_df.withColumn(
+            "conv_bucket", partition_key_col("conv_id", n_buckets)
+        ).persist()
         try:
             if not batch_df.take(1):
                 return
             store.append(batch_df, turns_table, partition_by=["conv_bucket"])
             affected = batch_df.select("conv_id").distinct()
-            # bounded driver-side collect: at most n_buckets distinct values
-            buckets = [r[0] for r in batch_df.select("conv_bucket").distinct().collect()]
+            buckets = _distinct(batch_df, "conv_bucket")
             # full turn history of just the touched conversations — the bucket
             # filter prunes the SCAN to the touched partitions, the broadcast
             # semi-join bounds the JOIN to the batch's conversations.
@@ -413,17 +435,14 @@ def incremental_assemble(
             prev_docs = None
             if near_dups and store.exists(docs_table):
                 prev_docs = (
-                    store.read(docs_table)
-                    .where(F.col("conv_bucket").isin(buckets))
-                    .join(F.broadcast(affected), "conv_id", "left_semi")
+                    pruned_read(store, docs_table, "conv_bucket", buckets, affected)
                     .select("conv_id", "doc_text")
                     .localCheckpoint(eager=True)
                 )
             # docs carry the same bucket column, so the upsert rewrites ONLY
-            # the touched documents_live partitions (the plain parquet
-            # merge_upsert rewrites the whole table — a per-batch scale bug)
+            # the touched documents_live partitions
             docs = assemble_documents(history).withColumn(
-                "conv_bucket", conv_bucket_expr(n_buckets)
+                "conv_bucket", partition_key_col("conv_id", n_buckets)
             )
             store.merge_upsert_partitioned(
                 docs, docs_table, key_cols=["conv_id"], partition_col="conv_bucket"
@@ -433,13 +452,10 @@ def incremental_assemble(
                 # index; read them back from the store (byte-equal to what
                 # the table now holds) with the scan pruned to the touched
                 # buckets — same discipline as the history read above
-                batch_docs = (
-                    store.read(docs_table)
-                    .where(F.col("conv_bucket").isin(buckets))
-                    .join(F.broadcast(affected), "conv_id", "left_semi")
-                )
+                batch_docs = pruned_read(store, docs_table, "conv_bucket", buckets, affected)
                 flag_near_dups(
-                    store, batch_docs, affected, n_buckets, prev_docs=prev_docs
+                    store, batch_docs, affected, n_buckets,
+                    prev_docs=prev_docs, batch_id=batch_id,
                 )
         finally:
             batch_df.unpersist()

@@ -54,6 +54,15 @@ def test_iceberg_append_and_overwrite_partitions(spark):
     # the parquet fallback's dynamic-overwrite conf must not be touched
     fake.conf.set.assert_not_called()
 
+    # overwritePartitions needs the table: a missing one is created with its
+    # partition spec
+    fake.catalog.tableExists.return_value = False
+    df3 = MagicMock()
+    store.overwrite_partitions(df3, "audit", partition_by=["batch_id"])
+    chain = df3.writeTo.return_value.using.return_value
+    chain.partitionedBy.return_value.create.assert_called_once()
+    df3.writeTo.return_value.overwritePartitions.assert_not_called()
+
 
 def test_iceberg_read_and_exists(spark):
     fake = _fake_spark_with_catalog()
@@ -150,8 +159,9 @@ def test_iceberg_merge_upsert_issues_merge_into(spark):
     by key), never the parquet rewrite."""
     fake = _fake_spark_with_catalog()
     store = TableStore(fake, "/tmp/unused", catalog="er")
-    df = MagicMock()
-    store.merge_upsert(df, "predictions", key_cols=["left_id"])
+    df = MagicMock()  # carries pk = partition_key_col("left_id", n)
+    df.select.return_value.distinct.return_value.collect.return_value = [(1,)]
+    store.merge_upsert_partitioned(df, "predictions", key_cols=["left_id"], partition_col="pk")
     df.createOrReplaceTempView.assert_called_once()
     view = df.createOrReplaceTempView.call_args[0][0]
     sql = fake.sql.call_args[0][0]
@@ -170,11 +180,38 @@ def test_iceberg_merge_upsert_bootstraps_missing_table(spark):
     fake.catalog.tableExists.return_value = False
     store = TableStore(fake, "/tmp/unused", catalog="er")
     df = MagicMock()
-    store.merge_upsert(df, "documents_live", key_cols=["conv_id"])
+    df.select.return_value.distinct.return_value.collect.return_value = [(7,)]
+    store.merge_upsert_partitioned(
+        df, "documents_live", key_cols=["conv_id"], partition_col="conv_bucket"
+    )
     df.writeTo.assert_called_once_with("er.documents_live")
     df.writeTo.return_value.using.assert_called_once_with("iceberg")
-    df.writeTo.return_value.using.return_value.create.assert_called_once()
+    df.writeTo.return_value.using.return_value.partitionedBy.return_value.create.assert_called_once()
     fake.sql.assert_not_called()
+    df.write.mode.assert_not_called()
+
+
+def test_iceberg_band_index_upsert_is_one_merge(spark):
+    """The band-index upsert (extra partitions: the old buckets of re-signed
+    conversations) is ONE MERGE INTO keyed on (conv_id, band_idx), pruned to
+    touched ∪ old buckets, without the partition equality (a matched row
+    moves bucket) and without a DELETE + append pair."""
+    fake = _fake_spark_with_catalog()
+    store = TableStore(fake, "/tmp/unused", catalog="er")
+    df = MagicMock()
+    df.select.return_value.distinct.return_value.collect.return_value = [(3,), (5,)]
+    store.merge_upsert_partitioned(
+        df, "dedup_band_index", key_cols=["conv_id", "band_idx"],
+        partition_col="band_bucket", extra_partition_vals=(9, 5),
+    )
+    assert fake.sql.call_count == 1
+    sql = fake.sql.call_args[0][0]
+    assert "MERGE INTO er.dedup_band_index t" in sql
+    assert "t.conv_id = s.conv_id AND t.band_idx = s.band_idx" in sql
+    assert "t.band_bucket IN (3, 5, 9)" in sql
+    assert "t.band_bucket = s.band_bucket" not in sql
+    assert "DELETE" not in sql
+    df.writeTo.return_value.append.assert_not_called()
     df.write.mode.assert_not_called()
 
 

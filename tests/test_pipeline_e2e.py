@@ -124,7 +124,7 @@ def test_cap_metrics_no_silent_truncation(spark, corpus):
     )
 
     docs = assemble_documents(transcripts).persist()
-    tiny_cap = BlockingConfig(block_cap=2, minhash_enabled=False)
+    tiny_cap = BlockingConfig(block_cap=2, passes=("token", "signature"))
     pairs, metrics = candidate_pairs(docs, tiny_cap)
     reported = metrics.agg(F.sum("rows_dropped")).collect()[0][0]
     docs.unpersist()

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from lab02_citation_matching_and_entity_resolution_spark.operators.clustering import (
     connected_components,
+    connected_components_star,
 )
 from lab02_citation_matching_and_entity_resolution_spark.operators.resolve import (
     greedy_one_to_one,
@@ -334,3 +335,16 @@ def test_auto_cc_surfaces_skew_stats(spark):
     assert stats["algorithm"] == "propagation"
     assert stats["hot_keys"] >= 1
     assert stats["salt_buckets"] == 4
+
+
+def test_cc_vertex_set_is_vertices_union_edge_endpoints(spark):
+    """An edge endpoint missing from ``vertices`` still carries and passes on
+    its label, so both algorithms give the same clusters: a-x-b with
+    vertices {a, b} is one component {a, b, x}."""
+    edges = spark.createDataFrame([("a", "x"), ("x", "b")], "left_id string, right_id string")
+    verts = spark.createDataFrame([("a",), ("b",)], "conv_id string")
+    prop = {r["conv_id"]: r["cluster_id"]
+            for r in connected_components(edges, vertices=verts).collect()}
+    star = {r["conv_id"]: r["cluster_id"]
+            for r in connected_components_star(edges, vertices=verts).collect()}
+    assert prop == star == {"a": "a", "b": "a", "x": "a"}

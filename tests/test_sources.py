@@ -61,6 +61,18 @@ def test_read_entry_stream(spark, tmp_path):
     assert all(r["src_file"] for r in got)
 
 
+def _upsert_by_left_id(store, df, name):
+    """Keyed upsert on left_id, partitioned by a key-derived column."""
+    from lab02_citation_matching_and_entity_resolution_spark.plans.lineage import (
+        partition_key_col,
+    )
+
+    store.merge_upsert_partitioned(
+        df.withColumn("pk", partition_key_col("left_id", 4)), name,
+        key_cols=["left_id"], partition_col="pk",
+    )
+
+
 def test_merge_upsert_parquet_is_per_key_update_not_append(spark, tmp_path):
     """Reference parity (modeling_utils.py:391-481): rescoring with a changed
     model must UPDATE each key's predictions row in place; unrelated keys
@@ -74,13 +86,13 @@ def test_merge_upsert_parquet_is_per_key_update_not_append(spark, tmp_path):
         [("a", 0.9, "m1"), ("b", 0.8, "m1"), ("c", 0.7, "m1")],
         "left_id string, score double, model string",
     )
-    store.merge_upsert(v1, "preds", key_cols=["left_id"])
+    _upsert_by_left_id(store, v1, "preds")
     # rescore: a and b change, d is new, c untouched
     v2 = spark.createDataFrame(
         [("a", 0.4, "m2"), ("b", 0.5, "m2"), ("d", 0.6, "m2")],
         "left_id string, score double, model string",
     )
-    store.merge_upsert(v2, "preds", key_cols=["left_id"])
+    _upsert_by_left_id(store, v2, "preds")
     got = {r["left_id"]: (r["score"], r["model"]) for r in store.read("preds").collect()}
     assert got == {
         "a": (0.4, "m2"),
@@ -116,19 +128,67 @@ def test_merge_upsert_end_to_end_rescore(spark, tmp_path):
 
     # array columns serialize fine to parquet; only driver-oracle rows ban them
     pa = predictions_table(scored_a, labeled, k=5)
-    store.merge_upsert(pa, "pred_table", key_cols=["left_id"])
+    _upsert_by_left_id(store, pa, "pred_table")
     # the rescore batch covers e1 only — scope truth to the batch, else the
     # labels full-join manufactures empty rows for every labeled entity and
     # the upsert would wipe them (the reference merges only the papers it
     # rescored, modeling_utils.py:391-481)
     pb = predictions_table(scored_b, labeled.where("left_id = 'e1'"), k=5)
-    store.merge_upsert(pb, "pred_table", key_cols=["left_id"])
+    _upsert_by_left_id(store, pb, "pred_table")
     rows = {r["left_id"]: r for r in store.read("pred_table").collect()}
     assert set(rows) == {"e1", "e2"}
     # e1 was rescored: top prediction is now x2 (model B's ranking)
     assert rows["e1"]["predictions"][0]["right_id"] == "x2"
     # e2 was not in the rescore batch: model A's row survives
     assert rows["e2"]["predictions"][0]["right_id"] == "x3"
+
+
+def test_merge_upsert_partitioned_deletes_emptied_extra_partition(spark, tmp_path):
+    """A key whose row moves partition (the caller passes its old partition
+    as an extra): the old partition, left with no rows, is deleted — no
+    stale row survives in it — and an untouched partition is left as is."""
+    from lab02_citation_matching_and_entity_resolution_spark.sources.tables import (
+        TableStore,
+    )
+
+    store = TableStore(spark, str(tmp_path))
+    schema = "k string, i int, v string, p int"
+    store.merge_upsert_partitioned(
+        spark.createDataFrame([("a", 0, "old", 1), ("b", 0, "b0", 2)], schema),
+        "idx", key_cols=["k", "i"], partition_col="p",
+    )
+    untouched = sorted(f.name for f in (tmp_path / "idx" / "p=2").iterdir())
+    store.merge_upsert_partitioned(
+        spark.createDataFrame([("a", 0, "new", 3)], schema),
+        "idx", key_cols=["k", "i"], partition_col="p", extra_partition_vals=(1,),
+    )
+    assert not (tmp_path / "idx" / "p=1").exists()
+    assert sorted(f.name for f in (tmp_path / "idx" / "p=2").iterdir()) == untouched
+    got = sorted(tuple(r) for r in store.read("idx").select("k", "i", "v", "p").collect())
+    assert got == [("a", 0, "new", 3), ("b", 0, "b0", 2)]
+
+
+def test_store_on_uri_root_sees_its_tables(spark, tmp_path):
+    """A root given as a URI (file:// here, as hdfs:// or s3a:// would be)
+    is seen through its Hadoop FileSystem: the second upsert merges into the
+    table instead of taking the bootstrap branch and overwriting it."""
+    from lab02_citation_matching_and_entity_resolution_spark.sources.tables import (
+        TableStore,
+    )
+
+    store = TableStore(spark, tmp_path.as_uri())
+    schema = "k string, v int, p int"
+    assert not store.exists("t")
+    store.merge_upsert_partitioned(
+        spark.createDataFrame([("a", 1, 0), ("b", 1, 1)], schema), "t", ["k"], "p"
+    )
+    assert store.exists("t")
+    store.merge_upsert_partitioned(
+        spark.createDataFrame([("a", 2, 0)], schema), "t", ["k"], "p"
+    )
+    assert sorted(tuple(r) for r in store.read("t").select("k", "v").collect()) == [
+        ("a", 2), ("b", 1)
+    ]
 
 
 # --- S4: per-group references.json scan (ref parse_util.py:593-630) -------

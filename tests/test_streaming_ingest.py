@@ -432,6 +432,43 @@ def test_band_index_read_prunes_partitions(spark, tmp_path):
     assert "band_bucket" in pf
 
 
+def test_near_dup_cap_audits_are_recorded(spark, tmp_path):
+    """A band bucket truncated by band_cap is recorded in the near-dup
+    cap-metrics table, tagged with the pair generator it came from: the
+    intra-batch one ("batch") and the batch-vs-index one ("cross").  Rows
+    land in the micro-batch's own partition, so a replay does not add them
+    twice, and the cross audit names only standing-index buckets the batch
+    shares (one band bucket here, so every index row is read each batch)."""
+    from lab02_citation_matching_and_entity_resolution_spark.streaming.ingest import (
+        flag_near_dups,
+    )
+
+    store = TableStore(spark, str(tmp_path / "tables"))
+    schema = "conv_id string, doc_text string"
+
+    def flag(batch_id, *docs):
+        df = spark.createDataFrame(list(docs), schema)
+        flag_near_dups(
+            store, df, df.select("conv_id"), band_cap=1, n_band_buckets=1,
+            batch_id=batch_id,
+        )
+        return [
+            (r["origin"], r["rows_dropped"])
+            for r in store.read("near_dup_cap_metrics")
+            .where(F.col("batch_id") == batch_id).collect()
+        ]
+
+    a = [("nd1", _ND_TEXT), ("nd2", _ND_TEXT), ("nd3", "gardening tools and pruning shears")]
+    # nd1/nd2 share all 4 bands: 4 capped 2-row buckets
+    assert flag(0, *a) == [("batch", 1)] * 4
+    assert flag(0, *a) == [("batch", 1)] * 4  # replay
+    # an unrelated doc shares no band with the capped index buckets
+    assert flag(1, ("nd5", "an unrelated note about train timetables")) == []
+    # nd4 shares nd1/nd2's bands: the standing index buckets are capped
+    assert flag(2, ("nd4", _ND_TEXT)) == [("cross", 1)] * 4
+    assert store.read("near_dup_cap_metrics").count() == 8
+
+
 def test_band_index_legacy_layout_refused(spark, tmp_path):
     """A conv-bucketed (round-6 layout) index must be refused loudly — the
     pruned match read cannot prune on it, and silently falling back to a
